@@ -112,12 +112,13 @@ class DedupConfig:
     # filter. Resolve via cfg.hamming_threshold, not this field.
     hamming_prefilter: int | str | None = "auto"
 
-    # 'expr'  : pure Spark SQL expressions (md5-based, bit-identical to
-    #           the DuckDB oracle). NOTE: higher-order-function lambdas
-    #           are interpreted (no whole-stage codegen) -> ~40 ms/doc.
-    # 'pandas': Arrow/pandas UDF, same md5 values as 'expr'.
-    # 'xxhash': Spark xxhash64 exprs (same HOF interpretation cost).
-    # 'fast'  : fully vectorized NumPy pandas UDF (siphash + reduceat);
+    # 'expr'  : md5 hash arrays from Spark SQL, MinHash/SimHash/band
+    #           folds in one NumPy mapInArrow; bit-identical to the
+    #           DuckDB oracle.
+    # 'pandas': per-doc hashlib pandas UDF, same md5 values as 'expr'.
+    # 'xxhash': 'expr' with JVM xxhash64 hashes; not oracle-checkable.
+    # 'fast'  : JVM xxhash64 word hashes, then splitmix shingle folds,
+    #           MinHash, SimHash and bands in one NumPy mapInArrow;
     #           deterministic, not oracle-checkable — the scale path.
     signature_impl: str = "expr"
 

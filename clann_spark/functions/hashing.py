@@ -1,14 +1,15 @@
 """MinHash / SimHash / band hashing — the LSH core (SURVEY.md §2.3).
 
-Three implementations with a bit-identity contract:
+Three hash families; the first two share a bit-identity contract:
 
   * Spark SQL expression builders (`*_sql`): pure JVM, whole-stage
     codegen, zero Python in the hot path. md5-based so the DuckDB
     oracle (clann_spark.oracles) reproduces values exactly.
-  * NumPy twins (`np_*`): used by the Arrow/pandas-UDF signature path
-    and by unit tests.
-  * A production `xxhash64` variant (fastest, JVM xxhash) for runs
-    where oracle parity is not needed.
+  * NumPy twins (`np_*`): the definitions the flat Arrow kernels and
+    the pandas-UDF signature path are tested against.
+  * The `fast` production path (JVM xxhash64 word hashes + splitmix
+    folds in one mapInArrow) for runs where oracle parity is not
+    needed; its hash space is versioned by HASH_IMPL_VERSION.
 
 Reference parity:
   MinHash       -> libpuffinn/include/puffinn/hash/minhash.hpp:97-127
@@ -180,6 +181,38 @@ def hamming_sql(a_expr: str, b_expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+def _segment_reduce(ufunc, vals: np.ndarray, offsets: np.ndarray, empty, dtype=None):
+    """ufunc-reduce each segment vals[offsets[d]:offsets[d+1]] along
+    axis 0 -> (n_segments, *vals.shape[1:]); empty segments get
+    `empty`. offsets[0] == 0 and offsets[-1] == len(vals).
+
+    ufunc.reduceat has no empty segment: a start equal to the next one
+    yields vals[start], and a start == len(vals) raises. Reducing over
+    the non-empty starts only is exact — only zero-length segments lie
+    between two consecutive non-empty starts — and the results scatter
+    back."""
+    starts = offsets[:-1]
+    nonempty = offsets[1:] > starts
+    if nonempty.all():
+        return ufunc.reduceat(vals, starts, axis=0, dtype=dtype)
+    out = np.full(
+        (starts.size, *vals.shape[1:]), empty, dtype=dtype or vals.dtype
+    )
+    if vals.size:
+        out[nonempty] = ufunc.reduceat(vals, starts[nonempty], axis=0, dtype=dtype)
+    return out
+
+
+def _majority_vote(bits_mat: np.ndarray, w_off: np.ndarray, bits: int) -> np.ndarray:
+    """(flat (n_words, 64) 0/1 bit matrix, doc offsets) -> (n_docs,)
+    int64 with bit j = majority of column j over the doc's rows (ties
+    -> 1), empty docs -> 0."""
+    ones = _segment_reduce(np.add, bits_mat, w_off, 0, dtype=np.int64)
+    counts = (w_off[1:] - w_off[:-1])[:, None]
+    bitvec = (2 * ones >= counts) & (counts > 0)
+    return (bitvec[:, :bits].astype(np.int64) << np.arange(bits)).sum(axis=1)
+
+
 def _md5_minhash_flat(
     sh: np.ndarray, sh_off: np.ndarray, a: np.ndarray, b: np.ndarray, prime: int
 ) -> np.ndarray:
@@ -187,20 +220,9 @@ def _md5_minhash_flat(
     num_perm) int64 signatures. Exactly minhash_sql's fold: per perm i,
     min over h of (a_i*h + b_i) % p; empty docs get the all-prime
     identity. a < 2^31 and h < 2^31 keep a*h+b < 2^62 — no overflow."""
-    n_docs = sh_off.size - 1
-    num_perm = a.size
-    sig = np.empty((n_docs, num_perm), dtype=np.int64)
-    if sh.size:
-        # reduceat raises on start == len (empty trailing segment);
-        # clamp and overwrite via the empty mask below
-        starts = np.minimum(sh_off[:-1], sh.size - 1)
-        for i in range(num_perm):
-            sig[:, i] = np.minimum.reduceat((a[i] * sh + b[i]) % prime, starts)
-        empty = sh_off[1:] == sh_off[:-1]
-        if empty.any():
-            sig[empty] = prime
-    else:
-        sig[:] = prime
+    sig = np.empty((sh_off.size - 1, a.size), dtype=np.int64)
+    for i in range(a.size):
+        sig[:, i] = _segment_reduce(np.minimum, (a[i] * sh + b[i]) % prime, sh_off, prime)
     return sig
 
 
@@ -214,16 +236,8 @@ def _md5_simhash_flat(
     view puts hash bit j in column j — no bit permutation, unlike the
     fast path's _simhash_from_words (whose permuted columns define
     their own hash space)."""
-    n_docs = w_off.size - 1
-    if wh.size == 0:
-        return np.zeros(n_docs, dtype=np.int64)
-    bits_mat = np.unpackbits(
-        wh.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-    ).astype(np.int32)
-    ones = np.add.reduceat(bits_mat, np.minimum(w_off[:-1], wh.size - 1), axis=0)
-    counts = (w_off[1:] - w_off[:-1])[:, None]
-    bitvec = (2 * ones.astype(np.int64) >= counts) & (counts > 0)
-    return (bitvec[:, :bits].astype(np.int64) << np.arange(bits)).sum(axis=1)
+    bits_mat = np.unpackbits(wh.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+    return _majority_vote(bits_mat, w_off, bits)
 
 
 def md5_parity_signature_arrow(
@@ -361,8 +375,10 @@ def np_band_hashes_from_sig(sig: np.ndarray, cfg: DedupConfig) -> np.ndarray:
 #: invalidated instead of silently joined against (band values from two
 #: different hash impls never collide -> zero candidates, no error).
 #: v1 = round-1 string shingles; v2 = round-2 siphash word folds;
-#: v3 = round-3 JVM xxhash64 word hashes + splitmix folds.
-HASH_IMPL_VERSION = 3
+#: v3 = round-3 JVM xxhash64 word hashes + splitmix folds;
+#: v4 = exact segmented reduce (a batch ending in an empty doc no
+#: longer drops the previous doc's last word from its SimHash).
+HASH_IMPL_VERSION = 4
 
 
 def _series_word_stream(wordsh: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -472,21 +488,12 @@ def _minhash_from_folds(
     """(flat uint64 shingle folds, doc offsets) -> (n_docs, num_perm)
     int64 signatures. Multiply-bijection + np.minimum.reduceat, >>33 so
     values stay 31-bit (schema parity with the oracle path)."""
-    n_docs = sh_off.size - 1
-    num_perm = mults.size
-    sig = np.empty((n_docs, num_perm), dtype=np.uint64)
-    if sh.size:
-        # reduceat raises on a start index == len(vals) (an empty
-        # trailing segment); clamp and overwrite via the mask below
-        starts = np.minimum(sh_off[:-1], sh.size - 1)
-        for i in range(num_perm):
-            sig[:, i] = np.minimum.reduceat(sh * mults[i], starts)
-        sig >>= np.uint64(33)
-        empty = sh_off[1:] == sh_off[:-1]
-        if empty.any():
-            sig[empty] = np.uint64(prime)
-    else:
-        sig[:] = np.uint64(prime)
+    sig = np.empty((sh_off.size - 1, mults.size), dtype=np.uint64)
+    # empty docs reduce to prime << 33, which the >> 33 maps to prime
+    empty = np.uint64(prime) << np.uint64(33)
+    for i in range(mults.size):
+        sig[:, i] = _segment_reduce(np.minimum, sh * mults[i], sh_off, empty)
+    sig >>= np.uint64(33)
     return sig.astype(np.int64)
 
 
@@ -497,19 +504,8 @@ def _simhash_from_words(wh_u: np.ndarray, w_off: np.ndarray) -> np.ndarray:
     unpackbits on the little-endian byte view: bit j of the hash is
     column 8*(j//8) + (7 - j%8) — a fixed permutation of columns, i.e.
     still 64 independent LSH bits (we take 60)."""
-    n_docs = w_off.size - 1
-    simhash = np.zeros(n_docs, dtype=np.int64)
-    if wh_u.size:
-        bits = np.unpackbits(wh_u.view(np.uint8).reshape(-1, 8), axis=1).astype(
-            np.int16
-        )
-        ones = np.add.reduceat(bits, np.minimum(w_off[:-1], wh_u.size - 1), axis=0)
-        counts = (w_off[1:] - w_off[:-1])[:, None]
-        bitvec = (2 * ones.astype(np.int64) >= counts) & (counts > 0)
-        simhash = (
-            bitvec[:, :SIMHASH_BITS].astype(np.int64) << np.arange(SIMHASH_BITS)
-        ).sum(axis=1)
-    return simhash
+    bits_mat = np.unpackbits(wh_u.view(np.uint8).reshape(-1, 8), axis=1)
+    return _majority_vote(bits_mat, w_off, SIMHASH_BITS)
 
 
 # ---------------------------------------------------------------------------

@@ -130,27 +130,26 @@ def grouped_buckets(
 ) -> DataFrame:
     """salted_buckets collapsed to ONE row per (band_hash, salt) group:
     (band_hash, salt, cnt, ds: array<struct<doc_id [, extra...]>>),
-    ds sorted ascending by doc_id (struct sort is field-order, doc_id
-    first; doc_ids are unique within a bucket, so the order is total).
+    ds holding each member doc once, sorted ascending by doc_id (struct
+    sort is field-order, doc_id first; extra cols are per-doc, so
+    doc_ids are unique within ds and the order is total).
 
-    The aggregation rides the same hashpartitioning(band_hash) the
-    census window already established (ClusteredDistribution accepts
-    subset partitioning), so collapsing adds NO exchange — and it
-    collapses only SURVIVORS (cnt >= 2 rows). Group arrays are bounded
-    by ~cfg.bucket_cap via salting, the same residence bound the
-    window-based plan had; the object-hash aggregate spills between
-    groups under memory pressure.
+    A group is built as a hash set of member rows (collect_set) and
+    sorted once: O(m) inserts plus an O(m log m) sort per group of m
+    rows. The aggregation rides the same hashpartitioning(band_hash)
+    the census window already established (ClusteredDistribution
+    accepts subset partitioning), so collapsing adds NO exchange — and
+    it collapses only SURVIVORS (cnt >= 2 rows). Group arrays are
+    bounded by ~cfg.bucket_cap via salting; the object-hash aggregate
+    spills between groups under memory pressure.
     """
     b = salted_buckets(bucket_df, cfg, extra_cols=extra_cols)
-    # array_distinct: a doc CAN land twice in one group when two of its
+    # collect_set: a doc CAN land twice in one group when two of its
     # bands hash equal (the embedding-LSH bucket source does not fold
-    # the band index into the hash) — its struct rows are identical
-    # (extra cols are per-doc), so distinct collapses them; the old
-    # self-join's strict a < b predicate excluded those self-pairs.
+    # the band index into the hash); its struct rows are identical, so
+    # the set keeps one and no self-pair is generated.
     return b.groupBy("band_hash", "salt").agg(
-        F.array_sort(
-            F.array_distinct(F.collect_list(F.struct("doc_id", *extra_cols)))
-        ).alias("ds"),
+        F.array_sort(F.collect_set(F.struct("doc_id", *extra_cols))).alias("ds"),
         F.first("cnt").alias("cnt"),
     )
 

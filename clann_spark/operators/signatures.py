@@ -2,16 +2,24 @@
 
 The analog of the reference's index build hash pass
 (libpuffinn collection.hpp:241-306: sketches + per-row hash codes),
-as one narrow (shuffle-free) projection pipeline. Three interchangeable
-implementations selected by DedupConfig.signature_impl:
+as one narrow (shuffle-free) projection pipeline. Implementations,
+selected by DedupConfig.signature_impl:
 
-  expr   : pure Spark SQL expressions (JVM codegen; md5-based, DuckDB-
-           oracle-checkable). Default.
-  pandas : one Arrow-batched pandas UDF (NumPy); identical values.
-  xxhash : JVM xxhash64 instead of md5 (fastest; same structure, not
-           oracle-checkable).
+  expr   : the JVM tokenizes, shingles and md5-hashes (Spark SQL
+           expressions); one mapInArrow then runs the MinHash fold,
+           SimHash vote and band folds in NumPy. Bit-identical to the
+           *_sql expressions and the DuckDB oracle. Default.
+  pandas : one Arrow-batched pandas UDF hashing each doc with hashlib;
+           the same md5 values as expr.
+  xxhash : expr with JVM xxhash64 shingle/word hashes in place of md5
+           (same mapInArrow folds; not oracle-checkable).
+  fast   : the JVM emits xxhash64 word hashes only; one mapInArrow
+           builds splitmix shingle folds, MinHash, SimHash and band
+           hashes from the flat Arrow buffers. Deterministic in its own
+           hash space (HASH_IMPL_VERSION), not oracle-checkable; the
+           production path.
 
-All three are narrow: the signature stage never shuffles.
+All of them are narrow: the signature stage never shuffles.
 """
 
 from __future__ import annotations

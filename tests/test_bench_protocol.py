@@ -147,32 +147,56 @@ def test_measured_fp_resolves_current_tree_through_git():
         assert cur == _measured_fp(_code_sha())
 
 
+def _committed_bench_copy(dst):
+    """Copy bench.py and the clann_spark sources into a fresh git repo
+    at dst, commit them, and load that bench.py as a separate module.
+
+    The copy's engine tree is clean by construction, so git resolution
+    is exercised whatever uncommitted changes the checkout holds."""
+    import importlib.util
+    import shutil
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copytree(
+        os.path.join(root, "clann_spark"), dst / "clann_spark",
+        ignore=shutil.ignore_patterns("__pycache__", "*.pyc"),
+    )
+    shutil.copy(os.path.join(root, "bench.py"), dst / "bench.py")
+    git = ["git", "-C", str(dst), "-c", "user.name=t", "-c",
+           "user.email=t@example.com", "-c", "commit.gpgsign=false"]
+    for args in (["init", "-q"], ["add", "-A"],
+                 ["commit", "-q", "--no-verify", "-m", "snapshot"]):
+        subprocess.run(git + args, check=True, capture_output=True)
+    spec = importlib.util.spec_from_file_location(
+        "bench_committed_copy", dst / "bench.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    saved_path = list(sys.path)
+    try:
+        spec.loader.exec_module(mod)
+    finally:
+        sys.path[:] = saved_path  # bench.py prepends its own directory
+    return mod
+
+
 def test_merge_history_resolves_scope_through_git(tmp_path):
     # an entry recorded under a LATER-superseded git sha whose measured
     # code is identical to the current tree (e.g. only record/report or
     # doc commits in between) counts as current-code evidence, even if
     # its full-file fingerprint label went stale
     import json
-    import subprocess
 
-    from bench import _code_sha, _merge_scaling_history
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    porcelain = subprocess.run(
-        ["git", "status", "--porcelain", "--", "clann_spark", "bench.py"],
-        capture_output=True, text=True, cwd=root,
-    ).stdout.strip()
-    if porcelain:
-        import pytest
-
-        pytest.skip("engine tree dirty: git resolution unavailable")
+    repo = tmp_path / "repo"
+    bench = _committed_bench_copy(repo)
+    assert bench._measured_fp(None) == bench._measured_fp(bench._code_sha())
     rec = str(tmp_path / "SCALING_RESULT.json")
     with open(rec, "w") as f:
         json.dump(
             {"clean_pairs_history": [
                 # same commit as HEAD but a stale code_fp label: the git
                 # resolution must still classify it as current
-                {"efficiency": 0.90, "code_sha": _code_sha(),
+                {"efficiency": 0.90, "code_sha": bench._code_sha(),
                  "code_fp": "fp-stale00000", "recorded_at": "old"},
                 # unresolvable sha, mismatched fp -> not current
                 {"efficiency": 0.10, "code_sha": "ffffffff",
@@ -180,7 +204,7 @@ def test_merge_history_resolves_scope_through_git(tmp_path):
             ]},
             f,
         )
-    m = _merge_scaling_history(_fake_result([0.80], [0.95, 0.96]), rec)
+    m = bench._merge_scaling_history(_fake_result([0.80], [0.95, 0.96]), rec)
     assert m["n_clean_pairs"] == 2  # 0.90 (resolved current) + 0.80 (new)
     assert m["efficiency_n_to_4n"] == 0.85
     assert "current measured code" in m["headline_scope"]

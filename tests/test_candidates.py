@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from clann_spark.config import DedupConfig
-from clann_spark.operators.candidates import bucket_census, candidate_pairs, salted_buckets
+from clann_spark.operators.candidates import (
+    bucket_census,
+    candidate_pairs,
+    grouped_buckets,
+    salted_buckets,
+)
 
 CFG = DedupConfig(num_perm=16, bands=4, rows_per_band=4, bucket_cap=10)
 
@@ -71,6 +76,41 @@ def test_auto_mode_mixes(spark):
     clique_part = {(1, 2), (1, 3), (2, 3)}
     anchor_part = {(10, i) for i in range(11, 30)}
     assert got == clique_part | anchor_part
+
+
+def test_doc_twice_in_group_is_one_member(spark):
+    # doc 3 lands in bucket 100 from two bands (the embedding-LSH
+    # source does not fold the band index into the hash): one member,
+    # no (3, 3) self-pair, members sorted by doc_id whatever the order
+    rows = [(9, 0, 100, 90), (3, 0, 100, 30), (3, 1, 100, 30), (5, 1, 100, 50), (1, 0, 100, 10)]
+    b = spark.createDataFrame(rows, "doc_id long, band_id int, band_hash long, sk long")
+    g = grouped_buckets(b, CFG, extra_cols=("sk",)).collect()
+    assert len(g) == 1
+    assert [(m["doc_id"], m["sk"]) for m in g[0]["ds"]] == [(1, 10), (3, 30), (5, 50), (9, 90)]
+    for mode in ("clique", "anchor", "auto"):
+        got = {(r["a"], r["b"]) for r in candidate_pairs(b, CFG, mode, anchor_threshold=2).collect()}
+        assert all(a < b for a, b in got), (mode, got)
+    got = {(r["a"], r["b"]) for r in candidate_pairs(b, CFG, "clique").collect()}
+    assert got == {(1, 3), (1, 5), (1, 9), (3, 5), (3, 9), (5, 9)}
+
+
+def test_auto_mode_mega_bucket_emits_anchor_edges(spark):
+    rows = [(i, i % 4, 7) for i in range(1000, 0, -1)]
+    cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4, bucket_cap=2000)
+    got = {(r["a"], r["b"]) for r in candidate_pairs(_buckets(spark, rows), cfg, "auto").collect()}
+    assert got == {(1, i) for i in range(2, 1001)}
+
+
+def test_group_collapse_has_no_array_distinct(spark):
+    """Struct-array array_distinct compares every element pair
+    (O(m^2) per group); the group collapse must stay a hash set."""
+    b = spark.createDataFrame(
+        [(1, 0, 100, 5), (2, 0, 100, 6)], "doc_id long, band_id int, band_hash long, sk long"
+    )
+    pairs = candidate_pairs(b, CFG, "auto", sketch_col="sk", hamming_threshold=8)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert "collect_set" in plan, plan
+    assert "array_distinct" not in plan, plan
 
 
 def test_run_dedup_auto_mode_releases_all_caches(spark):

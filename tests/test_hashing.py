@@ -10,6 +10,8 @@ from __future__ import annotations
 import duckdb
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from clann_spark import oracles as OQ
@@ -192,3 +194,166 @@ def test_xxhash_impl_runs_and_matches_dedup_outcome(spark):
         return out
 
     assert pairset("xxhash") == pairset("expr")
+
+
+# ---------------------------------------------------------------------------
+# Flat (segmented) kernels on hostile batch shapes: empty docs at any
+# position, trailing empties, all-empty batches, one-row batches.
+# ---------------------------------------------------------------------------
+
+_SEG_LENS = st.lists(st.integers(0, 5), min_size=1, max_size=10)
+
+
+def _ragged(lens, seed, bits):
+    """(flat uint64 values < 2^bits, int64 doc offsets) for segment lens."""
+    off = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    rng = np.random.default_rng(seed)
+    vals = rng.integers(0, 1 << bits, size=off[-1], dtype=np.uint64)
+    return vals, off
+
+
+def _segments(vals, off):
+    return [vals[off[d] : off[d + 1]] for d in range(off.size - 1)]
+
+
+def _fast_bit_order(wh: np.ndarray) -> np.ndarray:
+    """Word hashes with bits permuted into the column order the fast
+    SimHash votes in (unpackbits' MSB-first order per little-endian
+    byte), so np_simhash is its definitional twin."""
+    out = np.zeros(wh.size, dtype=np.uint64)
+    for c in range(64):
+        src = 8 * (c // 8) + 7 - c % 8
+        out |= ((wh >> np.uint64(src)) & np.uint64(1)) << np.uint64(c)
+    return out
+
+
+_HOSTILE = (
+    example(lens=[0], seed=0),
+    example(lens=[0, 0, 0], seed=0),
+    example(lens=[3], seed=0),
+    example(lens=[3, 0], seed=0),
+    example(lens=[0, 3], seed=0),
+    example(lens=[2, 0, 0, 4, 0], seed=0),
+)
+
+
+def _hostile(f):
+    for ex in _HOSTILE:
+        f = ex(f)
+    return settings(max_examples=60, deadline=None)(
+        given(lens=_SEG_LENS, seed=st.integers(0, 2**32 - 1))(f)
+    )
+
+
+@_hostile
+def test_md5_minhash_flat_matches_np_minhash(lens, seed):
+    a = np.array([p[0] for p in CFG.perms], dtype=np.int64)
+    b = np.array([p[1] for p in CFG.perms], dtype=np.int64)
+    sh, off = _ragged(lens, seed, 31)
+    sh = sh.astype(np.int64)
+    got = H._md5_minhash_flat(sh, off, a, b, CFG.prime)
+    for d, seg in enumerate(_segments(sh, off)):
+        assert got[d].tolist() == H.np_minhash(seg, a, b, CFG.prime).tolist(), d
+
+
+@_hostile
+def test_md5_simhash_flat_matches_np_simhash(lens, seed):
+    wh, off = _ragged(lens, seed, 64)
+    got = H._md5_simhash_flat(wh, off)
+    for d, seg in enumerate(_segments(wh, off)):
+        assert got[d] == H.np_simhash(seg.view(np.int64)), d
+
+
+@_hostile
+def test_fast_simhash_matches_np_simhash(lens, seed):
+    wh, off = _ragged(lens, seed, 64)
+    got = H._simhash_from_words(wh, off)
+    for d, seg in enumerate(_segments(wh, off)):
+        assert got[d] == H.np_simhash(_fast_bit_order(seg).view(np.int64)), d
+
+
+@_hostile
+def test_fast_minhash_matches_per_doc_fold(lens, seed):
+    cfg = DedupConfig(signature_impl="fast", num_perm=16, bands=4, rows_per_band=4)
+    mults = H.perm_multipliers(cfg)
+    sh, off = _ragged(lens, seed, 64)
+    got = H._minhash_from_folds(sh, off, mults, cfg.prime)
+    for d, seg in enumerate(_segments(sh, off)):
+        want = (
+            ((seg[:, None] * mults[None, :]).min(axis=0) >> np.uint64(33)).astype(np.int64)
+            if seg.size
+            else np.full(mults.size, cfg.prime)
+        )
+        assert got[d].tolist() == want.tolist(), d
+
+
+_BATCH_FNS = {
+    "fast": lambda cfg: H.fast_signature_arrow(cfg, ["doc_id"]),
+    "md5": lambda cfg: H.md5_parity_signature_arrow(cfg, ["doc_id"]),
+}
+
+
+@pytest.mark.parametrize("impl", sorted(_BATCH_FNS))
+@settings(max_examples=30, deadline=None)
+@given(
+    words=st.lists(
+        st.lists(st.integers(0, 2**62), max_size=8), min_size=1, max_size=8
+    )
+)
+@example(words=[[1, 2, 3, 4, 5, 6], []])
+@example(words=[[], []])
+def test_signature_batch_is_rowwise(impl, words):
+    """A doc's signature is a function of its own hashes only: computed
+    inside a ragged Arrow batch it equals the same doc computed as a
+    one-row batch, whatever empty docs surround it."""
+    import pyarrow as pa
+
+    cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4)
+    fn = _BATCH_FNS[impl](cfg)
+
+    def run(rows):
+        hashes = pa.array([w for _, w in rows], pa.list_(pa.int64()))
+        shingles = pa.array(
+            [[h % cfg.prime for h in w] for _, w in rows], pa.list_(pa.int64())
+        )
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([i for i, _ in rows], pa.int64()), hashes, shingles, hashes],
+            ["doc_id", "_wh", "shingle_hashes", "_word_hashes"],
+        )
+        return next(iter(fn([batch]))).to_pylist()
+
+    rows = list(enumerate(words))
+    whole = run(rows)
+    for i, w in rows:
+        assert whole[i] == run([(i, w)])[0], i
+
+
+@pytest.mark.parametrize("impl", ["expr", "fast"])
+def test_null_and_empty_text_keep_neighbour_signatures(spark, impl):
+    """Every input partition (one Arrow batch each) ends in a null or
+    empty text; the doc before it must keep the signature it gets on
+    its own."""
+    from clann_spark.operators.signatures import compute_signatures
+
+    cfg = DedupConfig(
+        signature_impl=impl, num_perm=16, bands=4, rows_per_band=4, hamming_prefilter=None
+    )
+    k = spark.sparkContext.defaultParallelism
+    texts = {2 * i: f"plain words about topic {i} and then some more words" for i in range(k)}
+
+    def sigs(rows):
+        rdd = spark.sparkContext.parallelize(rows, k)
+        df = spark.createDataFrame(rdd, "doc_id long, text string")
+        return {
+            r["doc_id"]: (r["shingle_hashes"], r["sig"], r["bands"], r["simhash"])
+            for r in compute_signatures(df, cfg).collect()
+        }
+
+    alone = sigs(sorted(texts.items()))
+    batched = sigs(
+        [row for d, t in sorted(texts.items()) for row in ((d, t), (d + 1, None if d % 4 else ""))]
+    )
+    for d in texts:
+        assert batched[d] == alone[d], d
+    assert len({repr(batched[d + 1]) for d in texts}) == 1

@@ -47,11 +47,12 @@ def test_signature_stage_is_narrow(spark, sf_dir):
         .repartition(2 * spark.sparkContext.defaultParallelism)
     )
     sigs = compute_signatures(docs, CFG, include_shingles=False, include_sig=False)
-    plan = _plan(sigs)
-    # the only Exchange NODE is the fixture's own repartition above
-    # (formatted explain prints each node once in the tree and once in
-    # the detail section — count tree lines)
-    assert plan.count("+- Exchange") <= 1, "signature stage must not shuffle"
+    # the stage adds no Exchange NODE to the input's own (the fixture's
+    # repartition); formatted explain prints each node once in the tree
+    # and once in the detail section — count tree lines
+    n_input = _plan(docs).count("+- Exchange")
+    assert n_input == 1
+    assert _plan(sigs).count("+- Exchange") == n_input, "signature stage must not shuffle"
 
 
 def test_candidates_stage_is_one_exchange(spark, sf_dir):
