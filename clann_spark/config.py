@@ -112,17 +112,20 @@ class DedupConfig:
     # filter. Resolve via cfg.hamming_threshold, not this field.
     hamming_prefilter: int | str | None = "auto"
 
-    # 'expr'  : md5 hash arrays from Spark SQL, MinHash/SimHash/band
-    #           folds in one NumPy mapInArrow; bit-identical to the
-    #           DuckDB oracle.
-    # 'pandas': per-doc hashlib pandas UDF, same md5 values as 'expr'.
-    # 'xxhash': 'expr' with JVM xxhash64 hashes; not oracle-checkable.
-    # 'fast'  : JVM xxhash64 word hashes, then splitmix shingle folds,
-    #           MinHash, SimHash and bands in one NumPy mapInArrow;
-    #           deterministic, not oracle-checkable — the scale path.
+    # 'expr': the oracle path. md5 hash arrays from Spark SQL, then
+    #         MinHash/SimHash/band folds in one NumPy mapInArrow;
+    #         bit-identical to the DuckDB oracle.
+    # 'fast': the production path. JVM xxhash64 word hashes, then
+    #         splitmix shingle folds, MinHash, SimHash and bands in one
+    #         NumPy mapInArrow; deterministic in its own hash space
+    #         (HASH_IMPL_VERSION), not oracle-checkable.
     signature_impl: str = "expr"
 
     def __post_init__(self) -> None:
+        if self.signature_impl not in ("expr", "fast"):
+            raise ValueError(
+                f"bad signature_impl {self.signature_impl!r}; valid: 'expr', 'fast'"
+            )
         if self.hash_source == "independent":
             if self.bands * self.rows_per_band != self.num_perm:
                 raise ValueError(
@@ -148,8 +151,6 @@ class DedupConfig:
             raise ValueError(
                 f"hash_source={self.hash_source!r} requires signature_impl='fast'"
             )
-        if self.signature_impl not in ("expr", "pandas", "xxhash", "fast"):
-            raise ValueError(f"bad signature_impl {self.signature_impl!r}")
         hp = self.hamming_prefilter
         if not (hp is None or hp == "auto" or (isinstance(hp, int) and hp >= 0)):
             raise ValueError(f"bad hamming_prefilter {hp!r}")

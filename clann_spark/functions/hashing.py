@@ -5,11 +5,16 @@ Three hash families; the first two share a bit-identity contract:
   * Spark SQL expression builders (`*_sql`): pure JVM, whole-stage
     codegen, zero Python in the hot path. md5-based so the DuckDB
     oracle (clann_spark.oracles) reproduces values exactly.
-  * NumPy twins (`np_*`): the definitions the flat Arrow kernels and
-    the pandas-UDF signature path are tested against.
+  * NumPy twins (`np_*`): the definitions the flat Arrow kernels are
+    tested against.
   * The `fast` production path (JVM xxhash64 word hashes + splitmix
     folds in one mapInArrow) for runs where oracle parity is not
     needed; its hash space is versioned by HASH_IMPL_VERSION.
+
+The two signature kernels (md5_parity_signature_arrow for the `expr`
+impl, fast_signature_arrow for `fast`) are both mapInArrow batch
+functions and share one output layout (signature_fields /
+_signature_batch).
 
 Reference parity:
   MinHash       -> libpuffinn/include/puffinn/hash/minhash.hpp:97-127
@@ -29,7 +34,6 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from clann_spark.config import MINHASH_PRIME, SIMHASH_BITS, DedupConfig
 
@@ -46,11 +50,6 @@ def h60_sql(s_expr: str) -> str:
 def shingle_hashes_sql(shingles_expr: str, prime: int = MINHASH_PRIME) -> str:
     """array<string> shingles -> array<bigint> distinct 31-bit set elements."""
     return f"array_distinct(transform({shingles_expr}, s -> {h60_sql('s')} % {prime}L))"
-
-
-def xxhash_shingle_hashes_sql(shingles_expr: str, seed: int, prime: int = MINHASH_PRIME) -> str:
-    """Production variant: xxhash64 (native JVM, ~10x faster than md5)."""
-    return f"transform({shingles_expr}, s -> pmod(xxhash64(s, {seed}), {prime}L))"
 
 
 # ---------------------------------------------------------------------------
@@ -244,59 +243,43 @@ def md5_parity_signature_arrow(
     cfg: DedupConfig,
     passthrough: list[str],
     include_shingles: bool = True,
-    sh_col: str = "shingle_hashes",
-    wh_col: str = "_word_hashes",
+    include_sig: bool = True,
 ):
     """mapInArrow batch fn: (passthrough..., shingle_hashes, _word_hashes)
-    -> (passthrough..., [shingle_hashes], sig, bands, simhash) with
-    values bit-identical to the minhash_sql/bands_sql/simhash_sql
-    expression chain (the DuckDB-oracle hash space). The hash ARRAYS
-    are JVM-computed (native md5); this function replaces only the
-    interpreted per-element HOF evaluation — the term that made the
-    oracle config's signature stage ~4x slower than the fast path."""
-    import pyarrow as pa
-
+    -> signature_fields layout, with values bit-identical to the
+    minhash_sql/bands_sql/simhash_sql expression chain (the
+    DuckDB-oracle hash space). The hash ARRAYS are JVM-computed (native
+    md5); this function replaces only the interpreted per-element HOF
+    evaluation — the term that made the oracle config's signature stage
+    ~4x slower than the fast path."""
     a = np.array([p[0] for p in cfg.perms], dtype=np.int64)
     b = np.array([p[1] for p in cfg.perms], dtype=np.int64)
     prime = cfg.prime
 
     def _fn(batches):
         for batch in batches:
-            shH, sh_off = _list_column_stream(batch.column(sh_col))
-            whH, w_off = _list_column_stream(batch.column(wh_col))
+            shH, sh_off = _list_column_stream(batch.column("shingle_hashes"))
+            whH, w_off = _list_column_stream(batch.column("_word_hashes"))
             sig = _md5_minhash_flat(shH.view(np.int64), sh_off, a, b, prime)
             simhash = _md5_simhash_flat(whH, w_off)
             bands = np.empty((sig.shape[0], cfg.bands), dtype=np.int64)
             for d in range(sig.shape[0]):
                 bands[d] = np_band_hashes(sig[d], cfg)
-            n = sh_off.size - 1
-            arrays = [batch.column(c) for c in passthrough]
-            names = list(passthrough)
-            if include_shingles:
-                arrays.append(batch.column(sh_col))
-                names.append("shingle_hashes")
-            arrays.append(
-                _list_array_from_segments(
-                    sig.reshape(-1), np.arange(n + 1, dtype=np.int64) * cfg.num_perm
-                )
+            yield _signature_batch(
+                batch,
+                passthrough,
+                batch.column("shingle_hashes") if include_shingles else None,
+                sig if include_sig else None,
+                simhash,
+                bands,
             )
-            names.append("sig")
-            arrays.append(
-                _list_array_from_segments(
-                    bands.reshape(-1), np.arange(n + 1, dtype=np.int64) * cfg.bands
-                )
-            )
-            names.append("bands")
-            arrays.append(pa.array(simhash))
-            names.append("simhash")
-            yield pa.RecordBatch.from_arrays(arrays, names)
 
     return _fn
 
 
 # ---------------------------------------------------------------------------
 # Fast production signature path (Arrow-batched, fully vectorized NumPy;
-# deterministic but NOT md5-parity — the oracle config stays 'expr'/'pandas')
+# deterministic but NOT md5-parity — the oracle config stays 'expr')
 # ---------------------------------------------------------------------------
 
 
@@ -381,28 +364,6 @@ def np_band_hashes_from_sig(sig: np.ndarray, cfg: DedupConfig) -> np.ndarray:
 HASH_IMPL_VERSION = 4
 
 
-def _series_word_stream(wordsh: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """pandas Series of int64 ndarrays (one per doc, from an Arrow
-    list<bigint> column) -> (flat uint64 word-hash stream, doc offsets).
-
-    np.concatenate is a C memcpy over the per-row buffers — the only
-    per-row Python cost left in the fast path (pyarrow already built the
-    row ndarrays during Arrow->pandas conversion)."""
-    n_docs = len(wordsh)
-    lens = np.fromiter(
-        (0 if a is None else len(a) for a in wordsh), dtype=np.int64, count=n_docs
-    )
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    if offsets[-1]:
-        H = np.concatenate([a for a in wordsh if a is not None and len(a)]).astype(
-            np.int64, copy=False
-        ).view(np.uint64)
-    else:
-        H = np.empty(0, dtype=np.uint64)
-    return H, offsets
-
-
 def _fold_stream(H: np.ndarray, offsets: np.ndarray, k: int):
     """Shared core of the fast path: shingle hashes as a k-lane splitmix
     fold over consecutive 64-bit word hashes (vectorized sliding
@@ -469,8 +430,8 @@ def _fold_stream(H: np.ndarray, offsets: np.ndarray, k: int):
 
 def perm_multipliers(cfg: DedupConfig) -> np.ndarray:
     """Seeded odd 64-bit multipliers — one uint64 bijection per MinHash
-    permutation. Shared by the pandas and Arrow fast paths (identical
-    values = one hash space, HASH_IMPL_VERSION contract)."""
+    permutation. Part of the fast hash space (HASH_IMPL_VERSION
+    contract)."""
     return (
         pd.util.hash_array(
             np.asarray(
@@ -509,7 +470,8 @@ def _simhash_from_words(wh_u: np.ndarray, w_off: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native fast path (mapInArrow — zero pandas, zero per-row Python)
+# Arrow batch plumbing and the fast kernels (mapInArrow — zero pandas,
+# zero per-row Python)
 # ---------------------------------------------------------------------------
 
 
@@ -526,7 +488,7 @@ def _list_column_stream(arr) -> tuple[np.ndarray, np.ndarray]:
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if arr.null_count:
-        raise ValueError("fast signature path requires non-null word-hash arrays")
+        raise ValueError("signature kernels require non-null hash arrays")
     off = np.asarray(arr.offsets, dtype=np.int64)
     vals = np.asarray(arr.values)
     H = vals[off[0] : off[-1]].astype(np.int64, copy=False).view(np.uint64)
@@ -551,20 +513,6 @@ def _list_array_from_segments(values: np.ndarray, offsets: np.ndarray):
     )
 
 
-def _compute_fast_signature_arrays(
-    H: np.ndarray, offsets: np.ndarray, cfg: DedupConfig, mults: np.ndarray
-):
-    """Shared compute core of the fast signature path. Input: flat
-    uint64 word-hash stream + doc offsets. Returns dict with sig
-    (n, num_perm) int64, simhash (n,) int64, bands (n, bands) int64,
-    and the per-doc-distinct shingle folds (sh uint64, sh_off)."""
-    sh, sh_off, wh_u, w_off = _fold_stream(H, offsets, cfg.shingle_k)
-    sig = _minhash_from_folds(sh, sh_off, mults, cfg.prime)
-    simhash = _simhash_from_words(wh_u, w_off)
-    bands = np_band_hashes_from_sig(sig, cfg)
-    return {"sig": sig, "simhash": simhash, "bands": bands, "sh": sh, "sh_off": sh_off}
-
-
 def _shingle31_segments(
     sh: np.ndarray, sh_off: np.ndarray, prime: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -583,66 +531,101 @@ def _shingle31_segments(
     return v, np.searchsorted(d, np.arange(n_docs + 1))
 
 
+def _rows_list_array(mat: np.ndarray):
+    """(n, w) int64 matrix -> ListArray of n rows of w values each."""
+    n, w = mat.shape
+    return _list_array_from_segments(
+        mat.reshape(-1), np.arange(n + 1, dtype=np.int64) * w
+    )
+
+
+def signature_fields(include_shingles: bool = True, include_sig: bool = True) -> list:
+    """Spark fields both signature kernels append after the passthrough
+    columns, in _signature_batch's order."""
+    from pyspark.sql.types import ArrayType, LongType, StructField
+
+    fields = []
+    if include_shingles:
+        fields.append(StructField("shingle_hashes", ArrayType(LongType())))
+    if include_sig:
+        fields.append(StructField("sig", ArrayType(LongType())))
+    fields.append(StructField("simhash", LongType()))
+    fields.append(StructField("bands", ArrayType(LongType())))
+    return fields
+
+
+def _signature_batch(batch, passthrough, shingles, sig, simhash, bands):
+    """Output RecordBatch of both signature kernels: the passthrough
+    columns, then [shingle_hashes] (an Arrow list array, or None),
+    [sig] ((n, num_perm), or None), simhash (n,) and bands (n, bands)
+    — the signature_fields layout."""
+    import pyarrow as pa
+
+    arrays = [batch.column(c) for c in passthrough]
+    names = list(passthrough)
+    if shingles is not None:
+        arrays.append(shingles)
+        names.append("shingle_hashes")
+    if sig is not None:
+        arrays.append(_rows_list_array(sig))
+        names.append("sig")
+    arrays.append(pa.array(simhash))
+    names.append("simhash")
+    arrays.append(_rows_list_array(bands))
+    names.append("bands")
+    return pa.RecordBatch.from_arrays(arrays, names)
+
+
 def fast_signature_arrow(
     cfg: DedupConfig,
     passthrough: list[str],
     include_shingles: bool = True,
     include_sig: bool = True,
-    wh_col: str = "_wh",
 ):
     """mapInArrow batch function: (passthrough..., _wh array<long>) ->
-    (passthrough..., [shingle_hashes], [sig], simhash, bands).
+    signature_fields layout, in the fast hash space (HASH_IMPL_VERSION).
 
-    The Arrow-native twin of fast_signature_udf — same hash space
-    (HASH_IMPL_VERSION), but the list<int64> word-hash column is read
-    straight from the Arrow buffers (values + offsets) and the outputs
-    are built from flat ndarrays: no Arrow->pandas conversion, no
-    per-row ndarray objects, no Python lists on the way out. This is
-    the round-3 fix for the signature stage's ~14 s/level Arrow
-    boundary term in the N->4N attribution (BASELINE.md)."""
-    import pyarrow as pa
+      * the word hashes arrive from the JVM (text.word_xxhash_sql:
+        codegen'd lower/split/xxhash64) and are read straight from the
+        Arrow buffers (values + offsets) — Python never sees text;
+      * shingle hashes are a k-lane splitmix fold over consecutive
+        word hashes — no k-gram strings are ever built (_fold_stream);
+      * MinHash = per permutation, multiply by a seeded odd 64-bit
+        constant (a bijection on uint64) and take a segmented minimum —
+        one vector multiply per permutation, no mod;
+      * SimHash = unpackbits bit matrix + segmented-sum majority vote;
+      * band hashes = splitmix64 rounds folding the r lanes.
 
+    Outputs are built from flat ndarrays: no Arrow->pandas conversion,
+    no per-row ndarray objects, no Python lists on the way out."""
     mults = perm_multipliers(cfg)
     prime = cfg.prime
-    n_bands = cfg.bands
+    k = cfg.shingle_k
 
     def _fn(batches):
         for batch in batches:
-            H, offsets = _list_column_stream(batch.column(wh_col))
-            r = _compute_fast_signature_arrays(H, offsets, cfg, mults)
-            n = offsets.size - 1
-            arrays = [batch.column(c) for c in passthrough]
-            names = list(passthrough)
-            if include_shingles:
-                v31, off31 = _shingle31_segments(r["sh"], r["sh_off"], prime)
-                arrays.append(_list_array_from_segments(v31, off31))
-                names.append("shingle_hashes")
-            if include_sig:
-                arrays.append(
-                    _list_array_from_segments(
-                        r["sig"].reshape(-1),
-                        np.arange(n + 1, dtype=np.int64) * cfg.num_perm,
-                    )
-                )
-                names.append("sig")
-            arrays.append(pa.array(r["simhash"]))
-            names.append("simhash")
-            arrays.append(
-                _list_array_from_segments(
-                    r["bands"].reshape(-1), np.arange(n + 1, dtype=np.int64) * n_bands
-                )
+            H, offsets = _list_column_stream(batch.column("_wh"))
+            sh, sh_off, wh_u, w_off = _fold_stream(H, offsets, k)
+            sig = _minhash_from_folds(sh, sh_off, mults, prime)
+            simhash = _simhash_from_words(wh_u, w_off)
+            bands = np_band_hashes_from_sig(sig, cfg)
+            shingles = (
+                _list_array_from_segments(*_shingle31_segments(sh, sh_off, prime))
+                if include_shingles
+                else None
             )
-            names.append("bands")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+            yield _signature_batch(
+                batch, passthrough, shingles, sig if include_sig else None, simhash, bands
+            )
 
     return _fn
 
 
-def fast_shingle_hashes_arrow(cfg: DedupConfig, passthrough: list[str], wh_col: str = "_wh"):
-    """mapInArrow twin of fast_shingle_hashes_udf: (passthrough..., _wh)
-    -> (passthrough..., shingle_hashes array<long>). Used by the verify
-    stage to re-derive candidate shingle sets without the pandas
-    boundary."""
+def fast_shingle_hashes_arrow(cfg: DedupConfig, passthrough: list[str]):
+    """mapInArrow batch function: (passthrough..., _wh) ->
+    (passthrough..., shingle_hashes array<long>), the same shingle
+    folds as fast_signature_arrow. Used by the verify stage to
+    re-derive candidate shingle sets."""
     import pyarrow as pa
 
     prime = cfg.prime
@@ -650,7 +633,7 @@ def fast_shingle_hashes_arrow(cfg: DedupConfig, passthrough: list[str], wh_col: 
 
     def _fn(batches):
         for batch in batches:
-            H, offsets = _list_column_stream(batch.column(wh_col))
+            H, offsets = _list_column_stream(batch.column("_wh"))
             sh, sh_off, _, _ = _fold_stream(H, offsets, k)
             v31, off31 = _shingle31_segments(sh, sh_off, prime)
             arrays = [batch.column(c) for c in passthrough]
@@ -658,141 +641,3 @@ def fast_shingle_hashes_arrow(cfg: DedupConfig, passthrough: list[str], wh_col: 
             yield pa.RecordBatch.from_arrays(arrays, list(passthrough) + ["shingle_hashes"])
 
     return _fn
-
-
-def fast_shingle_hashes_udf(cfg: DedupConfig):
-    """JVM word hashes (array<long>) -> array<long> distinct 31-bit
-    shingle hashes (fast path). Apply to text.word_xxhash_sql(text).
-
-    Used by the verify stage to re-derive shingle sets for candidate
-    docs only — the full corpus never carries the wide shingle column.
-    Same word-hash fold as fast_signature_udf, so signatures and
-    verification live in one consistent hash space.
-    """
-    from pyspark.sql.types import ArrayType, LongType
-
-    prime = cfg.prime
-    k = cfg.shingle_k
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _sh(wordsh: pd.Series) -> pd.Series:
-        H, offsets = _series_word_stream(wordsh)
-        sh, off, _, _ = _fold_stream(H, offsets, k)
-        hs31 = ((sh >> np.uint64(33)).astype(np.int64)) % prime
-        return pd.Series(
-            [np.unique(hs31[off[d] : off[d + 1]]).tolist() for d in range(len(wordsh))]
-        )
-
-    return _sh
-
-
-def fast_signature_udf(
-    cfg: DedupConfig, include_shingles: bool = True, include_sig: bool = True
-):
-    """JVM word hashes (array<long>, from text.word_xxhash_sql) ->
-    struct(shingle_hashes, sig, simhash, bands) — the scale path.
-    Per Arrow batch:
-
-      * tokenization + word hashing happen JVM-SIDE (codegen'd
-        lower/split/xxhash64) before the boundary; the UDF receives
-        only int64 arrays — zero Python string objects (round-3 fix
-        for the Arrow-boundary term in the N->4N attribution);
-      * shingle hashes are a k-lane splitmix fold over consecutive
-        word hashes — no k-gram strings are ever built (_fold_stream);
-      * MinHash = per permutation, multiply by a seeded odd 64-bit
-        constant (a bijection on uint64 — a valid min-wise permutation
-        family) + one np.minimum.reduceat over the concatenated hash
-        stream. No mod, no add: one vector multiply per permutation,
-        the cheapest inner loop the memory bus allows;
-      * SimHash = unpackbits (uint8 bit matrix, 4x less traffic than
-        the old int32 unpack) + np.add.reduceat majority vote;
-      * band hashes = splitmix64 rounds folding the r lanes (vectorized).
-
-    Deterministic but NOT md5-parity — the oracle config stays
-    'expr'/'pandas'. Values changed vs round 2 (HASH_IMPL_VERSION 3);
-    only cross-engine Jaccard values, which are hash-space independent,
-    are contract-bearing.
-    """
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    prime = cfg.prime
-    mults = perm_multipliers(cfg)
-
-    fields = [
-        StructField("simhash", LongType()),
-        StructField("bands", ArrayType(LongType())),
-    ]
-    if include_sig:
-        fields.insert(0, StructField("sig", ArrayType(LongType())))
-    if include_shingles:
-        fields.insert(0, StructField("shingle_hashes", ArrayType(LongType())))
-    schema = StructType(fields)
-
-    @F.pandas_udf(schema)
-    def _sig(wordsh: pd.Series) -> pd.DataFrame:
-        n_docs = len(wordsh)
-        H, offsets = _series_word_stream(wordsh)
-        r = _compute_fast_signature_arrays(H, offsets, cfg, mults)
-        out = {"simhash": r["simhash"], "bands": list(r["bands"])}
-        if include_sig:
-            out["sig"] = list(r["sig"])
-        if include_shingles:
-            v31, off31 = _shingle31_segments(r["sh"], r["sh_off"], prime)
-            out["shingle_hashes"] = [
-                v31[off31[d] : off31[d + 1]].tolist() for d in range(n_docs)
-            ]
-        return pd.DataFrame(out)
-
-    return _sig
-
-
-# ---------------------------------------------------------------------------
-# Pandas-UDF signature path (Arrow-batched; values identical to exprs)
-# ---------------------------------------------------------------------------
-
-
-def signature_udf(cfg: DedupConfig):
-    """text -> struct(shingle_hashes array<long>, sig array<long>, simhash long).
-
-    One Arrow batch in, one out; NumPy inside. The per-shingle md5 is the
-    only scalar loop (hashlib is C; ~1-2M shingles/s/core).
-    """
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    from clann_spark.functions.text import py_shingles, py_words
-
-    a = np.array([p[0] for p in cfg.perms], dtype=np.int64)
-    b = np.array([p[1] for p in cfg.perms], dtype=np.int64)
-    prime = cfg.prime
-
-    schema = StructType(
-        [
-            StructField("shingle_hashes", ArrayType(LongType())),
-            StructField("sig", ArrayType(LongType())),
-            StructField("simhash", LongType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def _sig(texts: pd.Series) -> pd.DataFrame:
-        sh_out, sig_out, sim_out = [], [], []
-        for t in texts:
-            t = t or ""
-            sh = py_shingles(t, cfg.shingle_k)
-            hs = np_shingle_hashes(sh, prime)
-            # set semantics: distinct hashes (md5 collisions inside one
-            # doc are harmless but keep parity with array_distinct path)
-            hs = np.unique(hs)
-            sig = np_minhash(hs, a, b, prime)
-            wh = np.unique(
-                np.array(
-                    [int(hashlib.md5(w.encode()).hexdigest()[:15], 16) for w in set(py_words(t))],
-                    dtype=np.int64,
-                )
-            ) if t else np.array([], dtype=np.int64)
-            sh_out.append(hs.tolist())
-            sig_out.append(sig.tolist())
-            sim_out.append(np_simhash(wh))
-        return pd.DataFrame({"shingle_hashes": sh_out, "sig": sig_out, "simhash": sim_out})
-
-    return _sig

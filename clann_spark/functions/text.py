@@ -1,8 +1,8 @@
 """Text normalization, shingling and HTML extraction.
 
 All hot-path functions exist as pure Spark SQL expression builders
-(JVM-side, whole-stage codegen — no Python in the scan) with NumPy
-twins used by the pandas-UDF signature path and by tests.
+(JVM-side, whole-stage codegen — no Python in the scan) with Python
+twins used by the ground-truth fixtures and by tests.
 
 Reference parity notes: the reference's set data model is a sorted set
 of bounded-universe u32 tokens (libpuffinn format/set.hpp:15-48); here

@@ -1,25 +1,23 @@
-"""Signature stage: text -> (shingle_hashes, sig, bands, simhash).
+"""Signature stage: text -> (shingle_hashes, sig, simhash, bands).
 
 The analog of the reference's index build hash pass
 (libpuffinn collection.hpp:241-306: sketches + per-row hash codes),
-as one narrow (shuffle-free) projection pipeline. Implementations,
-selected by DedupConfig.signature_impl:
+as one narrow (shuffle-free) projection pipeline. Two
+implementations, selected by DedupConfig.signature_impl:
 
-  expr   : the JVM tokenizes, shingles and md5-hashes (Spark SQL
-           expressions); one mapInArrow then runs the MinHash fold,
-           SimHash vote and band folds in NumPy. Bit-identical to the
-           *_sql expressions and the DuckDB oracle. Default.
-  pandas : one Arrow-batched pandas UDF hashing each doc with hashlib;
-           the same md5 values as expr.
-  xxhash : expr with JVM xxhash64 shingle/word hashes in place of md5
-           (same mapInArrow folds; not oracle-checkable).
-  fast   : the JVM emits xxhash64 word hashes only; one mapInArrow
-           builds splitmix shingle folds, MinHash, SimHash and band
-           hashes from the flat Arrow buffers. Deterministic in its own
-           hash space (HASH_IMPL_VERSION), not oracle-checkable; the
-           production path.
+  expr : the oracle path. The JVM tokenizes, shingles and md5-hashes
+         (Spark SQL expressions); one mapInArrow
+         (hashing.md5_parity_signature_arrow) then runs the MinHash
+         fold, SimHash vote and band folds in NumPy. Bit-identical to
+         the *_sql expressions and the DuckDB oracle. Default.
+  fast : the production path. The JVM emits xxhash64 word hashes only;
+         one mapInArrow (hashing.fast_signature_arrow) builds splitmix
+         shingle folds, MinHash, SimHash and band hashes from the flat
+         Arrow buffers. Deterministic in its own hash space
+         (HASH_IMPL_VERSION), not oracle-checkable.
 
-All of them are narrow: the signature stage never shuffles.
+Both kernels emit the same columns in the same order
+(hashing.signature_fields), and neither shuffles.
 """
 
 from __future__ import annotations
@@ -31,9 +29,6 @@ from clann_spark.config import DedupConfig
 from clann_spark.functions import hashing as H
 from clann_spark.functions import text as T
 
-#: Output columns added by compute_signatures.
-SIGNATURE_COLS = ("shingle_hashes", "sig", "bands", "simhash")
-
 
 def compute_signatures(
     df: DataFrame,
@@ -43,7 +38,7 @@ def compute_signatures(
     include_sig: bool = True,
     drop_text: bool = False,
 ) -> DataFrame:
-    """Append shingle_hashes / sig / bands / simhash to ``df``.
+    """Append shingle_hashes / sig / simhash / bands to ``df``.
 
     Keeps every original column (minus ``text_col`` when drop_text).
     Null text is treated as ''.
@@ -54,17 +49,16 @@ def compute_signatures(
     instead of carrying them through every shuffle — at 10^12 docs the
     shingle column alone would be multi-PB of shuffle traffic.
 
-    include_sig=False (fast impl only) additionally drops the raw
-    num_perm-lane signature from the OUTPUT (it is folded into band
-    hashes inside the UDF and consumed by nothing downstream) — ~1 KB
-    per row less Arrow transfer + cache/shuffle bytes.
+    include_sig=False additionally drops the raw num_perm-lane
+    signature from the OUTPUT (it is folded into band hashes inside the
+    kernel and consumed by nothing downstream) — ~1 KB per row less
+    Arrow transfer + cache/shuffle bytes.
 
     drop_text=True projects the text column away BEFORE the signature
-    op. For the fast (mapInArrow) impl this matters: every retained
-    column crosses the Arrow boundary both ways, and the pipeline
-    discards text after this stage anyway — dropping it first keeps the
-    IPC traffic at doc_id + word hashes instead of doc_id + word hashes
-    + the full document bytes.
+    op. Every retained column crosses the mapInArrow boundary both
+    ways, and the pipeline discards text after this stage anyway —
+    dropping it first keeps the IPC traffic at doc_id + hash arrays
+    instead of doc_id + hash arrays + the full document bytes.
 
     Local-input guard (round 6, mirrors run_dedup): a single large
     parquet file can arrive as ONE partition, which would serialize the
@@ -78,108 +72,53 @@ def compute_signatures(
     one fans out, and a well-partitioned cluster-scale scan is
     untouched (the stage stays narrow).
     """
+    from pyspark.sql.types import StructType
+
     from clann_spark.session import adaptive_input_split
 
     # granularity follows the impl's measured per-byte cost against
     # the OPTIMIZER'S size estimate (which is well below raw text
     # bytes): the vectorized fast path measures ~0.8-1 MB(est)/s
-    # per task, the md5-parity impls hash every shingle+word
+    # per task, the md5-parity impl hashes every shingle+word
     # through interpreted transforms at ~0.14 MB(est)/s — split so
     # a task stays ~0.1-0.2 s of hash work
-    df = adaptive_input_split(
-        df, (128 << 10) if cfg.signature_impl in ("fast", "xxhash") else (32 << 10)
-    )
-    if cfg.signature_impl == "fast":
-        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
+    fast = cfg.signature_impl == "fast"
+    df = adaptive_input_split(df, (128 << 10) if fast else (32 << 10))
+    txt = f"coalesce({text_col}, '')"
+    if fast:
         # Tokenize + word-hash JVM-side (codegen); only array<bigint>
         # crosses the Arrow boundary — Python never sees text.
-        wh = F.expr(T.word_xxhash_sql(f"coalesce({text_col}, '')", cfg.seed))
-        src = df.withColumn("_wh", wh)
-        if drop_text:
-            src = src.drop(text_col)
-        passthrough = [f.name for f in src.schema.fields if f.name != "_wh"]
-        out_fields = [f for f in src.schema.fields if f.name != "_wh"]
-        if include_shingles:
-            out_fields.append(StructField("shingle_hashes", ArrayType(LongType())))
-        if include_sig:
-            out_fields.append(StructField("sig", ArrayType(LongType())))
-        out_fields.append(StructField("simhash", LongType()))
-        out_fields.append(StructField("bands", ArrayType(LongType())))
-        # mapInArrow: the list<int64> word hashes are consumed straight
-        # from the Arrow buffers (values+offsets) and results are built
-        # from flat ndarrays — no pandas conversion in either direction
-        # (the round-3 Arrow-boundary fix, BASELINE.md attribution).
-        return src.mapInArrow(
-            H.fast_signature_arrow(
-                cfg, passthrough, include_shingles=include_shingles,
-                include_sig=include_sig,
-            ),
-            StructType(out_fields),
+        src = df.withColumn("_wh", F.expr(T.word_xxhash_sql(txt, cfg.seed)))
+        derived = ("_wh",)
+        kernel = H.fast_signature_arrow
+    else:
+        # The JVM computes the md5 HASH ARRAYS (tokenize/shingle/md5 —
+        # native functions, linear per-element work); the MinHash fold
+        # (num_perm ops per shingle), SimHash vote (60 ops per word) and
+        # band folds run vectorized in the kernel, bit-identical to the
+        # *_sql chain (tests/test_hashing.py, and the DuckDB oracle gate
+        # in tests/test_entry.py).
+        src = (
+            df.withColumn("_words", F.expr(T.words_sql(txt)))
+            .withColumn(
+                "_shingles", F.expr(T.shingles_from_words_sql("_words", cfg.shingle_k))
+            )
+            .withColumn("shingle_hashes", F.expr(H.shingle_hashes_sql("_shingles")))
+            .withColumn("_word_hashes", F.expr(H.word_hashes_sql("_words")))
+            .drop("_words", "_shingles")
         )
-    if cfg.signature_impl == "pandas":
-        udf = H.signature_udf(cfg)
-        out = df.withColumn("_s", udf(F.coalesce(F.col(text_col), F.lit(""))))
-        out = (
-            out.withColumn("shingle_hashes", F.col("_s.shingle_hashes"))
-            .withColumn("sig", F.col("_s.sig"))
-            .withColumn("simhash", F.col("_s.simhash"))
-            .drop("_s")
-        )
-        out = out.withColumn("bands", F.expr(H.bands_sql("sig", cfg)))
-        if drop_text:
-            out = out.drop(text_col)
-        return out if include_shingles else out.drop("shingle_hashes")
-
-    txt = f"coalesce({text_col}, '')"
-    if cfg.signature_impl == "xxhash":
-        hashes = H.xxhash_shingle_hashes_sql("_shingles", cfg.seed)
-        word_hashes = (
-            f"array_distinct(transform(array_distinct(_words), "
-            f"w -> xxhash64(w, {cfg.seed})))"
-        )
-    else:  # expr (md5 parity)
-        hashes = H.shingle_hashes_sql("_shingles")
-        word_hashes = H.word_hashes_sql("_words")
-
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    # Round-6 split of the oracle-parity path (guide §4.2): the JVM
-    # computes the HASH ARRAYS (tokenize/shingle/md5 — native functions,
-    # linear per-element work), while the MinHash fold (num_perm ops per
-    # shingle), the SimHash majority vote (60 ops per word) and the band
-    # folds — the interpreted-HOF terms that dominated this stage — run
-    # vectorized in ONE mapInArrow with bit-identical values
-    # (np_minhash/np_simhash/np_band_hashes parity, tests/test_hashing
-    # + the full DuckDB oracle gate in tests/test_entry.py). This also
-    # collapses the former ~100k-node expression tree (128 inline perm
-    # literals x 60 CASE branches), which Catalyst re-analyzed on every
-    # query build. Stage stays narrow: no shuffle, one Python boundary
-    # crossing of two int64-array columns.
-    src = (
-        df.withColumn("_words", F.expr(T.words_sql(txt)))
-        .withColumn(
-            "_shingles", F.expr(T.shingles_from_words_sql("_words", cfg.shingle_k))
-        )
-        .withColumn("shingle_hashes", F.expr(hashes))
-        .withColumn("_word_hashes", F.expr(word_hashes))
-        .drop("_words", "_shingles")
-    )
+        derived = ("shingle_hashes", "_word_hashes")
+        kernel = H.md5_parity_signature_arrow
     if drop_text:
         src = src.drop(text_col)
-    derived = ("shingle_hashes", "_word_hashes")
-    passthrough = [f.name for f in src.schema.fields if f.name not in derived]
-    out_fields = [f for f in src.schema.fields if f.name not in derived]
-    if include_shingles:
-        out_fields.append(StructField("shingle_hashes", ArrayType(LongType())))
-    out_fields.append(StructField("sig", ArrayType(LongType())))
-    out_fields.append(StructField("bands", ArrayType(LongType())))
-    out_fields.append(StructField("simhash", LongType()))
+    kept = [f for f in src.schema.fields if f.name not in derived]
+    # mapInArrow: the list<int64> hash columns are consumed straight
+    # from the Arrow buffers (values+offsets) and results are built
+    # from flat ndarrays — no pandas conversion in either direction
+    # (the round-3 Arrow-boundary fix, BASELINE.md attribution).
     return src.mapInArrow(
-        H.md5_parity_signature_arrow(
-            cfg, passthrough, include_shingles=include_shingles
-        ),
-        StructType(out_fields),
+        kernel(cfg, [f.name for f in kept], include_shingles, include_sig),
+        StructType(kept + H.signature_fields(include_shingles, include_sig)),
     )
 
 

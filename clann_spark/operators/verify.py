@@ -154,16 +154,14 @@ def verify_pairs_from_text(
         from clann_spark.functions import hashing as H
         from clann_spark.functions import text as T
 
-        if cfg.signature_impl == "xxhash":
-            hashes = H.xxhash_shingle_hashes_sql("_shingles", cfg.seed)
-        else:
-            hashes = H.shingle_hashes_sql("_shingles")
         sh = (
             cand_docs.withColumn("_words", F.expr(T.words_sql("coalesce(text, '')")))
             .withColumn(
                 "_shingles", F.expr(T.shingles_from_words_sql("_words", cfg.shingle_k))
             )
-            .select("doc_id", F.expr(hashes).alias("shingle_hashes"))
+            .select(
+                "doc_id", F.expr(H.shingle_hashes_sql("_shingles")).alias("shingle_hashes")
+            )
         )
 
     # the candidate shingle table feeds BOTH join sides; without a

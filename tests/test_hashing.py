@@ -110,22 +110,6 @@ def test_spark_equals_duckdb(spark, sample_df):
         assert s["simhash"] == d[4], f"doc {doc_id} simhash"
 
 
-def test_pandas_udf_equals_expr(spark, sample_df):
-    cfg = CFG
-    expr_rows = _spark_rows(spark, sample_df, cfg)
-    udf = H.signature_udf(cfg)
-    got = {
-        r["doc_id"]: r
-        for r in sample_df.select("doc_id", udf("text").alias("s")).select(
-            "doc_id", "s.shingle_hashes", "s.sig", "s.simhash"
-        ).collect()
-    }
-    for doc_id, _ in SAMPLE:
-        assert sorted(got[doc_id]["shingle_hashes"]) == sorted(expr_rows[doc_id]["hashes"])
-        assert got[doc_id]["sig"] == expr_rows[doc_id]["sig"]
-        assert got[doc_id]["simhash"] == expr_rows[doc_id]["simhash"]
-
-
 def test_simhash_similar_docs_close(spark):
     df = spark.createDataFrame(
         [
@@ -167,12 +151,11 @@ def test_md5_parity_arrow_path_equals_sql_exprs(spark, sample_df):
         assert got[doc_id]["simhash"] == expr_rows[doc_id]["simhash"], f"doc {doc_id} simhash"
 
 
-def test_xxhash_impl_runs_and_matches_dedup_outcome(spark):
-    """The xxhash impl shares the round-6 vectorized fold path with the
-    expr impl (different hash space, same structure); pin that it runs
-    and that the verified pair set — which is hash-space independent
-    for clear duplicates — matches the md5 impl on a fixture of exact
-    and near duplicates."""
+def test_fast_impl_matches_expr_dedup_outcome(spark):
+    """The two signature impls live in different hash spaces, but the
+    verified pair set — exact Jaccard, hash-space independent for clear
+    duplicates — must be the same on a fixture of exact and near
+    duplicates (the README's cross-impl claim)."""
     from clann_spark.pipeline import run_dedup
 
     rows = []
@@ -193,7 +176,9 @@ def test_xxhash_impl_runs_and_matches_dedup_outcome(spark):
         res.unpersist()
         return out
 
-    assert pairset("xxhash") == pairset("expr")
+    expr_pairs = pairset("expr")
+    assert expr_pairs  # the fixture's near-dups verify
+    assert pairset("fast") == expr_pairs
 
 
 # ---------------------------------------------------------------------------
@@ -357,3 +342,18 @@ def test_null_and_empty_text_keep_neighbour_signatures(spark, impl):
     for d in texts:
         assert batched[d] == alone[d], d
     assert len({repr(batched[d + 1]) for d in texts}) == 1
+
+
+@pytest.mark.parametrize("impl", ["expr", "fast"])
+def test_include_sig_false_drops_sig(spark, sample_df, impl):
+    """include_sig=False leaves the raw signature out of the output on
+    both impls, without changing the columns derived from it."""
+    from clann_spark.operators.signatures import compute_signatures
+
+    cfg = CFG.with_(signature_impl=impl)
+    with_sig = compute_signatures(sample_df, cfg)
+    no_sig = compute_signatures(sample_df, cfg, include_sig=False)
+    assert "sig" in with_sig.columns
+    assert "sig" not in no_sig.columns
+    cols = ["doc_id", "shingle_hashes", "simhash", "bands"]
+    assert sorted(no_sig.select(cols).collect()) == sorted(with_sig.select(cols).collect())

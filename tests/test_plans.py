@@ -35,7 +35,8 @@ def test_scan_prunes_columns_and_pushes_filters(spark, sf_dir):
     assert "lang" in pushed and "IsNotNull" in pushed
 
 
-def test_signature_stage_is_narrow(spark, sf_dir):
+@pytest.mark.parametrize("impl", ["expr", "fast"])
+def test_signature_stage_is_narrow(spark, sf_dir, impl):
     """On a well-partitioned input (the at-scale case) the signature
     stage must stay shuffle-free. (Pathologically under-split local
     inputs — a single-file parquet scan — get one guard repartition so
@@ -46,13 +47,35 @@ def test_signature_stage_is_narrow(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(2 * spark.sparkContext.defaultParallelism)
     )
-    sigs = compute_signatures(docs, CFG, include_shingles=False, include_sig=False)
+    sigs = compute_signatures(
+        docs, CFG.with_(signature_impl=impl), include_shingles=False, include_sig=False
+    )
     # the stage adds no Exchange NODE to the input's own (the fixture's
     # repartition); formatted explain prints each node once in the tree
     # and once in the detail section — count tree lines
     n_input = _plan(docs).count("+- Exchange")
     assert n_input == 1
     assert _plan(sigs).count("+- Exchange") == n_input, "signature stage must not shuffle"
+
+
+@pytest.mark.parametrize("include_sig", [True, False])
+@pytest.mark.parametrize("include_shingles", [True, False])
+def test_signature_impls_share_one_schema(spark, include_shingles, include_sig):
+    """Both impls append the same columns in the same order, so callers
+    never depend on which impl built a signature table."""
+    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    kw = dict(include_shingles=include_shingles, include_sig=include_sig)
+    expr = compute_signatures(docs, CFG.with_(signature_impl="expr"), **kw)
+    fast = compute_signatures(docs, CFG.with_(signature_impl="fast"), **kw)
+    want = ["doc_id", "text"]
+    want += ["shingle_hashes"] if include_shingles else []
+    want += ["sig"] if include_sig else []
+    want += ["simhash", "bands"]
+    assert expr.columns == fast.columns == want
+    assert expr.schema == fast.schema
+    # the kernels' batches really have that layout
+    for row in (expr.collect()[0], fast.collect()[0]):
+        assert isinstance(row["simhash"], int) and len(row["bands"]) == CFG.bands
 
 
 def test_candidates_stage_is_one_exchange(spark, sf_dir):

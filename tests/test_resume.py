@@ -156,6 +156,22 @@ def test_config_file_source(tmp_path_factory):
     assert cfgs[1].bands == 16 and cfgs[1].num_perm == 128
 
 
+def test_removed_signature_impls_rejected(tmp_path):
+    """Only 'expr' and 'fast' remain; a removed impl name fails at
+    config construction, also when it comes from a config file."""
+    from clann_spark.config import load_configs_from_file
+
+    for impl in ("pandas", "xxhash"):
+        with pytest.raises(ValueError, match="valid: 'expr', 'fast'"):
+            DedupConfig(signature_impl=impl)
+        p = tmp_path / f"{impl}.json"
+        p.write_text(json.dumps({"configs": [{"signature_impl": impl}]}))
+        with pytest.raises(ValueError, match=repr(impl)):
+            load_configs_from_file(str(p))
+    with pytest.raises(ValueError, match="requires signature_impl='fast'"):
+        DedupConfig(signature_impl="expr", hash_source="pooled")
+
+
 def test_different_input_invalidates_checkpoint(spark, docs, tmp_path_factory):
     """Same workdir + same config but a DIFFERENT input table must not
     resume from the previous corpus's committed stages."""
