@@ -417,18 +417,29 @@ def q_knn_cosine_top5(spark, sf_dir):
     # Norms are precomputed ONCE PER VECTOR before the cross join — the
     # identical fold expression on the identical array yields identical
     # doubles, so per-pair work drops from ~3 interpreted array folds to
-    # 1 (guide §1.2 "per-task work"). The corpus side is repartitioned
-    # and STREAMED while the 1-in-50 query sample is broadcast: the
-    # previous shape streamed the 1-partition parquet scan, so every
-    # pair's fold ran in a single task (guide §2.6 stragglers).
+    # 1 (guide §1.2 "per-task work"). The corpus side is STREAMED, split
+    # by its estimated size rather than the core count (a one-file scan
+    # would run every pair's fold in one task, guide §2.6 stragglers).
+    # The 1-in-50 query sample is broadcast only while the optimizer's
+    # estimate fits the broadcast threshold; past it the join strategy
+    # is Spark's, so cluster scale cannot force an oversized broadcast.
+    from clann_spark.session import adaptive_input_split, estimated_bytes
+
     q = emb.where("vec_id % 50 = 0").selectExpr(
         "vec_id AS query_id", "embedding AS va", f"{_norm('embedding')} AS na"
     )
-    c = emb.selectExpr(
-        "vec_id AS neighbor_id", "embedding AS vb", f"{_norm('embedding')} AS nb"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    c = adaptive_input_split(
+        emb.selectExpr(
+            "vec_id AS neighbor_id", "embedding AS vb", f"{_norm('embedding')} AS nb"
+        ),
+        128 << 10,
+    )
+    q_bytes = estimated_bytes(q)
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if q_bytes is not None and 0 <= q_bytes <= limit:
+        q = F.broadcast(q)
     scored = (
-        c.crossJoin(F.broadcast(q))
+        c.crossJoin(q)
         .where("query_id != neighbor_id")
         .selectExpr(
             "query_id",

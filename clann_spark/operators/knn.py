@@ -467,6 +467,87 @@ def lsh_text_query(
     Returns (query_id, doc_id, jaccard, rank).
 
     corpus_buckets: a PRE-EXPLODED committed bucket table
+    (doc_id, band_id, band_hash [, simhash]); see lsh_query_pairs.
+    The two halves (pair generation, verify + top-k) are public so the
+    streaming micro-batch can verify its corpus pairs together with its
+    intra-batch pairs in one pass.
+    """
+    from clann_spark.operators.signatures import compute_signatures
+    from clann_spark.operators.verify import verify_pairs_from_text
+
+    q_sigs = (
+        query_sigs
+        if query_sigs is not None
+        else compute_signatures(
+            queries, cfg, include_shingles=False, include_sig=False, drop_text=True
+        )
+    )
+    pairs, cand = lsh_query_pairs(q_sigs, corpus_sigs, cfg, corpus_buckets)
+    docs_union = corpus_docs.select("doc_id", "text").unionByName(
+        queries.select("doc_id", "text")
+    )
+    from pyspark.sql import Observation
+
+    verify_obs = Observation()
+    verified = verify_pairs_from_text(
+        pairs, docs_union, cfg, keep_below_tau=True, observation=verify_obs
+    )
+    from clann_spark.session import track_cache
+
+    out = (
+        rank_matches(verified)
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("a").alias("query_id"),
+            F.col("b").alias("doc_id"),
+            "jaccard",
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+    # q_buckets (registered on pairs) + the verify stage's caches:
+    # released per micro-batch by streaming callers via
+    # session.unpersist_intermediates
+    out = track_cache(out, pairs, verified)
+    # per-query counters (search_metrics_query parity,
+    # result_schema.sql:32-75): n_candidates = band-join output,
+    # n_comparisons = exact Jaccard evaluations actually run (post-
+    # prefilter survivors); the run-level totals are also observable on
+    # the plan itself via verify_observation(out).
+    n_cand = cand.groupBy("query_id").agg(F.count("*").alias("n_candidates"))
+    n_comp = pairs.groupBy(F.col("a").alias("query_id")).agg(
+        F.count("*").alias("n_comparisons")
+    )
+    out._clann_query_metrics = n_cand.join(n_comp, "query_id", "left").select(
+        "query_id",
+        "n_candidates",
+        F.coalesce("n_comparisons", F.lit(0)).alias("n_comparisons"),
+    )
+    out._clann_verify_observation = verify_obs
+    return out
+
+
+def rank_matches(verified: DataFrame, by: tuple = ()) -> DataFrame:
+    """Add `rank`: the row number of each verified (a, b, jaccard) pair
+    within its query a (and the `by` columns), best jaccard first, ties
+    to the smaller b."""
+    w = Window.partitionBy(*by, "a").orderBy(F.desc("jaccard"), F.asc("b"))
+    return verified.withColumn("rank", F.row_number().over(w))
+
+
+def lsh_query_pairs(
+    q_sigs: DataFrame,
+    corpus_sigs: DataFrame,
+    cfg: DedupConfig,
+    corpus_buckets: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Band-join candidate pairs of query-mode dedup: returns
+    (pairs, cand). pairs holds the distinct (a=query_id, b=doc_id)
+    pairs to verify, after the J7 sketch prefilter when the config and
+    the inputs enable it; cand holds the distinct (query_id, doc_id)
+    band-join output before it.
+
+    q_sigs: (doc_id, bands [, simhash]) of the queries.
+    corpus_buckets: a PRE-EXPLODED committed bucket table
     (doc_id, band_id, band_hash [, simhash]) — when given, corpus_sigs
     is never exploded (or even read) for candidate generation: the
     query bands join straight against the committed rows. This is the
@@ -479,17 +560,12 @@ def lsh_text_query(
     prunes further. When the bucket rows carry a simhash column the J7
     sketch prefilter fuses into the band join as a bit_count predicate
     instead of the two post-hoc joins of prefilter_pairs_by_simhash.
+    The persisted query-bucket table is registered on pairs
+    (session.track_cache).
     """
-    from clann_spark.operators.signatures import compute_signatures, explode_bands
-    from clann_spark.operators.verify import verify_pairs_from_text
+    from clann_spark.operators.signatures import explode_bands
+    from clann_spark.session import track_cache
 
-    q_sigs = (
-        query_sigs
-        if query_sigs is not None
-        else compute_signatures(
-            queries, cfg, include_shingles=False, include_sig=False, drop_text=True
-        )
-    )
     threshold = cfg.hamming_threshold
     fused_prefilter = (
         corpus_buckets is not None
@@ -532,10 +608,10 @@ def lsh_text_query(
         pairs = cand.select(F.col("query_id").alias("a"), F.col("doc_id").alias("b"))
     # J7 sketch prefilter (filterer.hpp:20-32) between candidate
     # generation and exact verification — applied when both sides carry
-    # the simhash column and the config enables it. n_comparisons below
-    # counts the SURVIVORS (true Jaccard evaluations), n_candidates the
-    # band-join output, so the two diverge exactly when pairs are
-    # prefiltered (search_metrics_query parity).
+    # the simhash column and the config enables it. lsh_text_query's
+    # n_comparisons counts the SURVIVORS (true Jaccard evaluations),
+    # n_candidates the band-join output, so the two diverge exactly
+    # when pairs are prefiltered (search_metrics_query parity).
     if (
         not fused_prefilter
         and corpus_buckets is None
@@ -549,44 +625,4 @@ def lsh_text_query(
             q_sigs.select("doc_id", "simhash")
         )
         pairs = prefilter_pairs_by_simhash(pairs, sim_union, threshold)
-    docs_union = corpus_docs.select("doc_id", "text").unionByName(
-        queries.select("doc_id", "text")
-    )
-    from pyspark.sql import Observation
-
-    verify_obs = Observation()
-    verified = verify_pairs_from_text(
-        pairs, docs_union, cfg, keep_below_tau=True, observation=verify_obs
-    )
-    w = Window.partitionBy("a").orderBy(F.desc("jaccard"), F.asc("b"))
-    from clann_spark.session import track_cache
-
-    out = (
-        verified.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("a").alias("query_id"),
-            F.col("b").alias("doc_id"),
-            "jaccard",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
-    # q_buckets + the verify stage's pair cache: released per micro-batch
-    # by streaming callers via session.unpersist_intermediates
-    out = track_cache(out, q_buckets, verified)
-    # per-query counters (search_metrics_query parity,
-    # result_schema.sql:32-75): n_candidates = band-join output,
-    # n_comparisons = exact Jaccard evaluations actually run (post-
-    # prefilter survivors); the run-level totals are also observable on
-    # the plan itself via verify_observation(out).
-    n_cand = cand.groupBy("query_id").agg(F.count("*").alias("n_candidates"))
-    n_comp = pairs.groupBy(F.col("a").alias("query_id")).agg(
-        F.count("*").alias("n_comparisons")
-    )
-    out._clann_query_metrics = n_cand.join(n_comp, "query_id", "left").select(
-        "query_id",
-        "n_candidates",
-        F.coalesce("n_comparisons", F.lit(0)).alias("n_comparisons"),
-    )
-    out._clann_verify_observation = verify_obs
-    return out
+    return track_cache(pairs, q_buckets), cand

@@ -113,7 +113,13 @@ def verify_pairs_from_text(
     appear in a candidate pair (semi-join reduction), so the corpus never
     carries the wide shingle column through shuffles.
 
-    docs: (doc_id, text). Join strategy is size-gated: when the pair
+    docs: (doc_id, text [, tags...]). Pair columns beyond (a, b) pass
+    through to the output, and each extra docs column c arrives as
+    c_a / c_b from the doc that side matched: a caller verifying pairs
+    of several origins in one pass can tell which doc rows it got. The
+    output is (a, b, pair extras..., doc extras..., jaccard).
+
+    Join strategy is size-gated: when the pair
     list fits under cfg.broadcast_limit rows it is broadcast (map-side
     joins, the common low-dup case); above the limit — a genuinely
     duplicate-heavy corpus at 10^12 docs produces billions of candidate
@@ -129,6 +135,9 @@ def verify_pairs_from_text(
         .distinct()
     )
     cand_docs = docs.join(F.broadcast(cand_ids) if small else cand_ids, "doc_id")
+    pair_extra = [c for c in pairs.columns if c not in ("a", "b")]
+    doc_extra = [c for c in docs.columns if c not in ("doc_id", "text")]
+    keep = ["doc_id", *doc_extra]
 
     if cfg.signature_impl == "fast":
         from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -138,16 +147,14 @@ def verify_pairs_from_text(
 
         # JVM tokenize+hash, then fold in numpy — same hash space as
         # the signature stage (shared _fold_stream core). mapInArrow:
-        # only (doc_id, word hashes) cross the boundary in, and the
-        # ragged shingle arrays come back as raw Arrow buffers.
+        # only (doc_id, doc extras, word hashes) cross the boundary in,
+        # and the ragged shingle arrays come back as raw Arrow buffers.
         wh = F.expr(T.word_xxhash_sql("coalesce(text, '')", cfg.seed))
-        sh = cand_docs.select("doc_id", wh.alias("_wh")).mapInArrow(
-            fast_shingle_hashes_arrow(cfg, ["doc_id"]),
+        sh = cand_docs.select(*keep, wh.alias("_wh")).mapInArrow(
+            fast_shingle_hashes_arrow(cfg, keep),
             StructType(
-                [
-                    StructField("doc_id", cand_docs.schema["doc_id"].dataType),
-                    StructField("shingle_hashes", ArrayType(LongType())),
-                ]
+                [cand_docs.schema[c] for c in keep]
+                + [StructField("shingle_hashes", ArrayType(LongType()))]
             ),
         )
     else:
@@ -160,7 +167,7 @@ def verify_pairs_from_text(
                 "_shingles", F.expr(T.shingles_from_words_sql("_words", cfg.shingle_k))
             )
             .select(
-                "doc_id", F.expr(H.shingle_hashes_sql("_shingles")).alias("shingle_hashes")
+                *keep, F.expr(H.shingle_hashes_sql("_shingles")).alias("shingle_hashes")
             )
         )
 
@@ -172,16 +179,16 @@ def verify_pairs_from_text(
     sh = sh.persist()
     j = (
         (F.broadcast(pairs) if small else pairs)
-        .join(
-            sh.select(F.col("doc_id").alias("a"), F.col("shingle_hashes").alias("sh_a")),
-            "a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("b"), F.col("shingle_hashes").alias("sh_b")),
-            "b",
-        )
+        .join(_side(sh, "a", doc_extra), "a")
+        .join(_side(sh, "b", doc_extra), "b")
     )
-    out = j.select("a", "b", F.expr(JACCARD_SQL).alias("jaccard"))
+    out = j.select(
+        "a",
+        "b",
+        *pair_extra,
+        *[f"{c}_{side}" for c in doc_extra for side in "ab"],
+        F.expr(JACCARD_SQL).alias("jaccard"),
+    )
     if observation is not None:
         # A8 distance-computation counter (performance.hpp:72-80 analog):
         # exact similarity evaluations, counted by the plan's own action —
@@ -202,3 +209,13 @@ def verify_pairs_from_text(
     # callers can release the blocks (session.unpersist_intermediates)
     # instead of leaking executor storage over a long-running stream.
     return track_cache(out, pairs, sh)
+
+
+def _side(sh: DataFrame, side: str, doc_extra: list[str]) -> DataFrame:
+    """The shingle table as one join side: doc_id -> `side`,
+    shingle_hashes -> sh_<side>, each extra doc column c -> c_<side>."""
+    return sh.select(
+        F.col("doc_id").alias(side),
+        F.col("shingle_hashes").alias(f"sh_{side}"),
+        *[F.col(c).alias(f"{c}_{side}") for c in doc_extra],
+    )

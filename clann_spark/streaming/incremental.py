@@ -35,10 +35,12 @@ tests/test_streaming.py pins the per-batch plan property (exactly one
 band explode — the query side — and a scan of the buckets table).
 
 Intra-batch duplicates: docs arriving in the SAME micro-batch are
-deduped against each other first (band self-join + exact verify,
-canonical a < b): the later copy gets a match row pointing at the
-earlier one and is NOT accepted into state. Without this, availableNow
-backfills (one giant batch) would admit every duplicate.
+deduped against each other too (band self-join, canonical a < b): the
+later copy gets a match row pointing at the earlier one and is NOT
+accepted into state. Without this, availableNow backfills (one giant
+batch) would admit every duplicate. The intra pairs and the corpus
+pairs are exact-verified in ONE pass (one size gate, one
+candidate-shingle stage), then split by origin.
 
 State compaction: every compact_every batches the accumulated
 batch=<id> directories are rewritten into a single base-<upto>
@@ -178,7 +180,7 @@ def _bootstrap_buckets(
     docs state stay valid) holds the exploded
     (doc_id, band_id, band_hash) rows of the corpus (base-<K>) plus
     one batch=<id> append per
-    accepted micro-batch; lsh_text_query joins query bands against it
+    accepted micro-batch; lsh_query_pairs joins query bands against it
     directly, so the per-batch cost is a columnar scan instead of an
     O(corpus) signature re-explode + shuffle. Rows are clustered by
     band_hash at write (repartition + sortWithinPartitions) — the
@@ -298,7 +300,7 @@ def stream_dedup_query(
     option), pinning a deterministic batch split for tests/oracles.
     """
     from clann_spark.operators.candidates import candidate_pairs
-    from clann_spark.operators.knn import lsh_text_query
+    from clann_spark.operators.knn import lsh_query_pairs, rank_matches
     from clann_spark.operators.signatures import compute_signatures, explode_bands
     from clann_spark.operators.verify import verify_pairs_from_text
     from clann_spark.session import unpersist_intermediates
@@ -321,21 +323,25 @@ def stream_dedup_query(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        # every cache this batch creates, released when it ends — also
+        # when it fails, or a retried stream leaks executor storage
+        held: list[DataFrame] = []
+        try:
+            _match_and_commit(batch_df, batch_id, held)
+        finally:
+            for df in held:
+                unpersist_intermediates(df)
+                df.unpersist()
+
+    def _match_and_commit(
+        batch_df: DataFrame, batch_id: int, held: list[DataFrame]
+    ) -> None:
         batch_df = batch_df.persist()
+        held.append(batch_df)
         q_sigs = compute_signatures(
             batch_df, cfg, include_shingles=False, include_sig=False, drop_text=True
         ).persist()
-
-        # intra-batch dedup FIRST: duplicates arriving within one
-        # micro-batch (the whole backfill, under availableNow) must be
-        # caught before corpus matching. Canonical a < b: the later
-        # copy is the duplicate of the earlier.
-        intra = verify_pairs_from_text(
-            candidate_pairs(explode_bands(q_sigs, cfg), cfg, mode="clique"),
-            batch_df,
-            cfg,
-        ).persist()
-        intra_dup_ids = intra.select(F.col("b").alias("doc_id")).distinct()
+        held.append(q_sigs)
 
         all_docs = corpus_docs.select("doc_id", "text")
         state = _read_state(spark, state_dir, batch_id) if state_dir else None
@@ -344,6 +350,7 @@ def stream_dedup_query(
             # bucket table, never the state's signature columns
             all_docs = all_docs.unionByName(state.select("doc_id", "text"))
 
+        bucket_state = None
         if buckets_dir is not None:
             # scale path: query bands join the committed bucket table —
             # a columnar scan, not an O(corpus) re-explode per batch
@@ -369,25 +376,50 @@ def stream_dedup_query(
                     F.col("band_id").cast("int"),
                     F.col("band_hash").cast("long"),
                 )
-            corpus_matches = lsh_text_query(
-                batch_df, corpus_sigs, all_docs, cfg, k=k,
-                query_sigs=q_sigs.select("doc_id", "bands"),
-                corpus_buckets=bucket_state,
-            )
-        else:
-            corpus_matches = lsh_text_query(
-                batch_df, corpus_sigs.select("doc_id", "bands"), all_docs, cfg,
-                k=k, query_sigs=q_sigs.select("doc_id", "bands"),
-            )
-        # intra-batch matches appear in the output too (the later copy
-        # points at the earlier); rank joins after the corpus ranks
-        intra_matches = intra.select(
-            F.col("b").alias("query_id"),
-            F.col("a").alias("doc_id"),
-            "jaccard",
-            F.lit(0).cast("long").alias("rank"),
+        corpus_pairs, _ = lsh_query_pairs(
+            q_sigs.select("doc_id", "bands"),
+            corpus_sigs.select("doc_id", "bands"),
+            cfg,
+            corpus_buckets=bucket_state,
         )
-        matches = corpus_matches.unionByName(intra_matches).persist()
+        held.append(corpus_pairs)
+        # intra-batch pairs: duplicates arriving within one micro-batch
+        # (the whole backfill, under availableNow) must be caught too.
+        # Canonical a < b: the later copy is the duplicate of the
+        # earlier.
+        intra_pairs = candidate_pairs(explode_bands(q_sigs, cfg), cfg, mode="clique")
+
+        # ONE verify for both pair sets, against corpus ∪ state ∪ batch
+        # text: one size gate, one candidate-shingle stage. Docs are
+        # tagged so an intra pair keeps only the batch-text match of
+        # each side (a batch doc id that is also in the corpus or state
+        # must not duplicate its intra rows); corpus pairs keep every
+        # match, exactly as lsh_text_query verifies them.
+        pairs = corpus_pairs.withColumn("intra", F.lit(False)).unionByName(
+            intra_pairs.withColumn("intra", F.lit(True))
+        )
+        docs = all_docs.withColumn("in_batch", F.lit(False)).unionByName(
+            batch_df.select("doc_id", "text").withColumn("in_batch", F.lit(True))
+        )
+        verified = verify_pairs_from_text(pairs, docs, cfg, keep_below_tau=True)
+        held.append(verified)
+        intra = F.col("intra")
+        verified = verified.where(~intra | (F.col("in_batch_a") & F.col("in_batch_b")))
+        # corpus rows: top-k per query, as lsh_text_query ranks them;
+        # intra rows at or above tau: the later copy points at the
+        # earlier, rank 0
+        matches = (
+            rank_matches(verified, by=("intra",))
+            .where(F.when(intra, F.col("jaccard") >= cfg.tau).otherwise(F.col("rank") <= k))
+            .select(
+                F.when(intra, F.col("b")).otherwise(F.col("a")).alias("query_id"),
+                F.when(intra, F.col("a")).otherwise(F.col("b")).alias("doc_id"),
+                "jaccard",
+                F.when(intra, F.lit(0)).otherwise(F.col("rank")).cast("long").alias("rank"),
+            )
+            .persist()
+        )
+        held.append(matches)
         # idempotent sink: a retried batch overwrites its own directory
         matches.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
 
@@ -397,14 +429,14 @@ def stream_dedup_query(
             # join is batch-scale, not corpus-scale.
             accepted = batch_df.join(q_sigs.select("doc_id", "bands"), "doc_id")
             if not accept_duplicates:
+                # every intra match clears tau, so this also rejects
+                # the later copy of each intra-batch duplicate
                 dup_ids = (
                     matches.where(F.col("jaccard") >= cfg.tau)
                     .select(F.col("query_id").alias("doc_id"))
                     .distinct()
                 )
-                accepted = accepted.join(
-                    dup_ids.unionByName(intra_dup_ids).distinct(), "doc_id", "left_anti"
-                )
+                accepted = accepted.join(dup_ids, "doc_id", "left_anti")
             accepted.write.mode("overwrite").parquet(f"{state_dir}/batch={batch_id}")
             # bucket rows mirror the COMMITTED docs-state dir (read back
             # rather than recomputed from the live plan, so a partially
@@ -427,15 +459,6 @@ def stream_dedup_query(
             _compact_state(
                 spark, buckets_dir, batch_id, compact_every, schema=BUCKET_SCHEMA
             )
-        # release every cache this batch registered (corpus_matches'
-        # verify/q_bucket caches included) — a continuous stream would
-        # otherwise accumulate executor storage without bound
-        unpersist_intermediates(corpus_matches)
-        unpersist_intermediates(intra)
-        matches.unpersist()
-        intra.unpersist()
-        q_sigs.unpersist()
-        batch_df.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(_process)

@@ -210,3 +210,15 @@ def test_shuffle_path_has_no_broadcast_of_pairs(spark):
     # sides at runtime, but the static plan must come from the shuffle
     # family for the gated joins)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+
+
+def test_knn_cosine_plan_is_sized_by_data_not_cores(spark, sf_dir):
+    """q_knn_cosine_top5 splits its corpus side by the optimizer's size
+    estimate (session.adaptive_input_split), not to the core count, and
+    broadcasts the query sample only because its estimate fits."""
+    from clann_spark.entry_queries import q_knn_cosine_top5
+
+    plan = _plan(q_knn_cosine_top5(spark, sf_dir))
+    cores = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({cores})" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan

@@ -422,3 +422,92 @@ def test_pre_bucket_layout_replay_sees_pre_batch_state(
     assert (8002, 8001) in top, top
     st3 = {r["doc_id"] for r in spark.read.parquet(state).collect()}
     assert st3 == {8001}, st3
+
+
+def test_one_verify_pass_per_micro_batch(spark, corpus, tmp_path_factory, monkeypatch):
+    """A micro-batch verifies its corpus pairs and its intra-batch pairs
+    in ONE pass: verify_pairs_from_text is called once, and the
+    candidate-shingle kernel runs in exactly one stage."""
+    from pyspark import TaskContext
+
+    from clann_spark.functions import hashing
+    from clann_spark.operators import verify
+
+    docs, sigs = corpus
+    base = str(tmp_path_factory.mktemp("stream_one_verify"))
+    in_dir, out_dir, ckpt, state, marks = (
+        f"{base}/in", f"{base}/out", f"{base}/ckpt", f"{base}/state", f"{base}/marks"
+    )
+    os.makedirs(in_dir)
+    os.makedirs(marks)
+
+    calls = []
+    real_verify = verify.verify_pairs_from_text
+
+    def counting_verify(*args, **kwargs):
+        calls.append(1)
+        return real_verify(*args, **kwargs)
+
+    real_kernel = hashing.fast_shingle_hashes_arrow
+
+    def marking_kernel(cfg, passthrough):
+        fn = real_kernel(cfg, passthrough)
+
+        def run(batches):
+            tc = TaskContext.get()
+            name = f"{tc.stageId()}-{tc.partitionId()}-{tc.attemptNumber()}"
+            open(os.path.join(marks, name), "w").close()
+            yield from fn(batches)
+
+        return run
+
+    monkeypatch.setattr(verify, "verify_pairs_from_text", counting_verify)
+    monkeypatch.setattr(hashing, "fast_shingle_hashes_arrow", marking_kernel)
+
+    novel = "an unseen report on lichen growth over basalt flows " * 6
+    _write_batch(
+        spark, in_dir,
+        [(9201, novel), (9202, novel + "tail"),
+         (9203, "corpus document number 11 with stable words repeated " * 6)],
+    )
+    q = stream_dedup_query(spark, in_dir, sigs, docs, CFG, out_dir, ckpt, state_dir=state)
+    q.awaitTermination(120)
+
+    out = spark.read.parquet(out_dir)
+    top = {(r["query_id"], r["doc_id"]) for r in out.where("rank <= 1").collect()}
+    assert {(9202, 9201), (9203, 11)} <= top, top
+    assert len(calls) == 1
+    stages = {m.split("-")[0] for m in os.listdir(marks)}
+    assert len(stages) == 1, sorted(os.listdir(marks))
+
+
+def test_failed_batch_releases_its_caches(spark, corpus, tmp_path_factory, monkeypatch):
+    """A micro-batch that fails after persisting its intermediates must
+    still release them: the executor's persisted-RDD count is back to
+    its pre-batch size once the query has failed."""
+    from clann_spark.streaming import incremental
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("injected state-compaction failure")
+
+    monkeypatch.setattr(incremental, "_compact_state", fail)
+    docs, sigs = corpus
+    base = str(tmp_path_factory.mktemp("stream_fail"))
+    in_dir, out_dir, ckpt, state = (
+        f"{base}/in", f"{base}/out", f"{base}/ckpt", f"{base}/state"
+    )
+    os.makedirs(in_dir)
+    novel = "a first draft on moraine dating methods " * 6
+    _write_batch(
+        spark, in_dir,
+        [(9301, novel), (9302, novel + "tail"),
+         (9303, "corpus document number 5 with stable words repeated " * 6)],
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    q = stream_dedup_query(spark, in_dir, sigs, docs, CFG, out_dir, ckpt, state_dir=state)
+    with pytest.raises(Exception, match="injected state-compaction failure"):
+        q.awaitTermination(120)
+    # the batch got as far as its sink before failing
+    assert spark.read.parquet(out_dir).count() > 0
+    assert persistent().size() == before
