@@ -3,12 +3,12 @@
 
 NOT part of the driver contract — bench.py stays the frozen headline.
 This file exists so optimization work can (a) isolate each bench query
-with repeats, (b) attribute e2e wall to stages, and (c) dump
-explain("formatted") plans for plans/r06/.
+with repeats and (b) dump explain("formatted") plans for plans/r06/.
+Per-layer attribution of the shipped run_dedup chain is
+`python3 perfbench/run.py --trace 1`.
 
 Usage:
   python bench_extra.py --queries [n_reps]       # per-query repeats
-  python bench_extra.py --stages                 # e2e stage walls (fast + md5 cfg)
   python bench_extra.py --explain OUTDIR SUFFIX  # dump per-query plans
 """
 
@@ -143,75 +143,6 @@ def run_queries(n_reps: int = 3) -> dict:
     return out
 
 
-def run_stages() -> dict:
-    """Stage attribution of both e2e configs at SF_DIR (factor 1)."""
-    from pyspark.sql import functions as F
-
-    from clann_spark.config import DedupConfig
-    from clann_spark.operators.candidates import candidate_pairs
-    from clann_spark.operators.connected_components import connected_components
-    from clann_spark.operators.signatures import compute_signatures, explode_bands
-    from clann_spark.operators.verify import verify_pairs_from_text
-
-    spark = _spark()
-    out: dict = {}
-    for label, cfg in (
-        ("fast", DedupConfig(signature_impl="fast")),
-        ("md5", DedupConfig(hamming_prefilter=None)),
-    ):
-        docs = _docs(spark).repartition(64).persist()
-        docs.count()
-        stages: dict = {}
-
-        def timed(name, thunk, stages=stages):
-            t0 = time.time()
-            r = thunk()
-            stages[name] = round(time.time() - t0, 3)
-            return r
-
-        threshold = cfg.hamming_threshold
-        extra = ("simhash",) if threshold is not None else ()
-        sigs = compute_signatures(
-            docs, cfg, include_shingles=False, include_sig=False, drop_text=True
-        ).persist()
-        timed("signatures", sigs.count)
-
-        def _cands():
-            c = candidate_pairs(
-                explode_bands(sigs, cfg, extra_cols=extra),
-                cfg,
-                "auto",
-                sketch_col="simhash" if threshold is not None else None,
-                hamming_threshold=threshold,
-            ).persist()
-            c.count()
-            return c
-
-        cands = timed("candidates", _cands)
-        verified = timed(
-            "verify",
-            lambda: (lambda df: (df.count(), df)[1])(
-                verify_pairs_from_text(cands, docs, cfg).persist()
-            ),
-        )
-        clusters = timed("cc", lambda: (lambda df: (df.count(), df)[1])(
-            connected_components(verified)))
-        timed(
-            "assign_summary",
-            lambda: docs.select("doc_id")
-            .join(clusters, "doc_id", "left")
-            .select(F.coalesce("cluster_id", "doc_id").alias("cluster_id"))
-            .agg(F.count("*"), F.countDistinct("cluster_id"))
-            .collect(),
-        )
-        stages["sum"] = round(sum(stages.values()), 3)
-        out[label] = stages
-        spark.catalog.clearCache()
-        print(json.dumps({label: stages}), file=sys.stderr)
-    spark.stop()
-    return out
-
-
 def dump_plans(outdir: str, suffix: str) -> None:
     """explain('formatted') for every bench query -> outdir/<q>_<suffix>.txt"""
     from clann_spark.config import DedupConfig
@@ -275,8 +206,6 @@ if __name__ == "__main__":
     if len(sys.argv) >= 2 and sys.argv[1] == "--queries":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 3
         print(json.dumps(run_queries(n)))
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--stages":
-        print(json.dumps(run_stages()))
     elif len(sys.argv) >= 4 and sys.argv[1] == "--explain":
         dump_plans(sys.argv[2], sys.argv[3])
     else:

@@ -557,9 +557,10 @@ def lsh_query_pairs(
     rows appended per accepted batch — the reference's insert-then-
     rebuild lifecycle, collection.hpp:218-222/:241-306, made O(batch))
     is a columnar scan that a bucketed/band_hash-partitioned layout
-    prunes further. When the bucket rows carry a simhash column the J7
-    sketch prefilter fuses into the band join as a bit_count predicate
-    instead of the two post-hoc joins of prefilter_pairs_by_simhash.
+    prunes further. When the config sets a Hamming threshold and both
+    the query sigs and the corpus rows (the committed bucket table, or
+    corpus_sigs exploded here) carry simhash, the J7 sketch prefilter
+    fuses into the band join as a bit_count predicate.
     The persisted query-bucket table is registered on pairs
     (session.track_cache).
     """
@@ -567,36 +568,36 @@ def lsh_query_pairs(
     from clann_spark.session import track_cache
 
     threshold = cfg.hamming_threshold
-    fused_prefilter = (
-        corpus_buckets is not None
-        and threshold is not None
-        and "simhash" in corpus_buckets.columns
-        and "simhash" in q_sigs.columns
-    )
+    sketch = threshold is not None and "simhash" in q_sigs.columns
+    if corpus_buckets is None:
+        with_sketch = sketch and "simhash" in corpus_sigs.columns
+        corpus_buckets = explode_bands(
+            corpus_sigs, cfg, extra_cols=("simhash",) if with_sketch else ()
+        )
+    fused_prefilter = sketch and "simhash" in corpus_buckets.columns
     q_extra = ("simhash",) if fused_prefilter else ()
     q_buckets = (
         explode_bands(q_sigs, cfg, extra_cols=q_extra)
         .withColumnRenamed("doc_id", "query_id")
         .withColumnsRenamed({"simhash": "_sk_q"} if fused_prefilter else {})
     )
-    if corpus_buckets is not None:
-        c_buckets = corpus_buckets
-    else:
-        c_buckets = explode_bands(corpus_sigs, cfg)
 
     # size-gate the query-band broadcast: incremental batches are
     # usually tiny, but a backfill of millions of queries must degrade
     # to a shuffle join rather than OOM the executors
     q_buckets = q_buckets.persist()
     q_small = q_buckets.count() <= cfg.broadcast_limit
-    joined = c_buckets.join(
+    joined = corpus_buckets.join(
         F.broadcast(q_buckets) if q_small else q_buckets,
         ["band_id", "band_hash"],
     ).where("query_id != doc_id")
     cand = joined.select("query_id", "doc_id").dropDuplicates(["query_id", "doc_id"])
     if fused_prefilter:
         # simhash is per-doc, so the predicate is identical on every
-        # band row of a pair — it commutes with the distinct below
+        # band row of a pair — it commutes with the distinct below.
+        # lsh_text_query's n_comparisons counts these survivors and
+        # n_candidates the band-join output (cand), so the two diverge
+        # exactly when pairs are prefiltered (search_metrics_query parity)
         pairs = (
             joined.where(
                 F.expr("bit_count(simhash ^ _sk_q)") <= F.lit(threshold)
@@ -606,23 +607,4 @@ def lsh_query_pairs(
         )
     else:
         pairs = cand.select(F.col("query_id").alias("a"), F.col("doc_id").alias("b"))
-    # J7 sketch prefilter (filterer.hpp:20-32) between candidate
-    # generation and exact verification — applied when both sides carry
-    # the simhash column and the config enables it. lsh_text_query's
-    # n_comparisons counts the SURVIVORS (true Jaccard evaluations),
-    # n_candidates the band-join output, so the two diverge exactly
-    # when pairs are prefiltered (search_metrics_query parity).
-    if (
-        not fused_prefilter
-        and corpus_buckets is None
-        and threshold is not None
-        and "simhash" in q_sigs.columns
-        and "simhash" in corpus_sigs.columns
-    ):
-        from clann_spark.operators.verify import prefilter_pairs_by_simhash
-
-        sim_union = corpus_sigs.select("doc_id", "simhash").unionByName(
-            q_sigs.select("doc_id", "simhash")
-        )
-        pairs = prefilter_pairs_by_simhash(pairs, sim_union, threshold)
     return track_cache(pairs, q_buckets), cand

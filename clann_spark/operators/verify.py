@@ -23,13 +23,7 @@ JACCARD_SQL = (
 )
 
 
-def verify_pairs(
-    pairs: DataFrame,
-    sig_df: DataFrame,
-    cfg: DedupConfig,
-    keep_below_tau: bool = False,
-    broadcast_pairs: bool = False,
-) -> DataFrame:
+def verify_pairs(pairs: DataFrame, sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(a, b) candidates -> (a, b, jaccard) verified pairs.
 
     sig_df must carry doc_id, shingle_hashes and (if the prefilter is
@@ -44,12 +38,6 @@ def verify_pairs(
     if has_simhash:
         cols.append(F.col("simhash"))
     s = sig_df.select(*cols)
-
-    # Broadcasting the (usually tiny) pair list keeps the wide signature
-    # table un-shuffled — the joins become map-side. The caller flips
-    # this on when the candidate count is known to fit (pipeline does).
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
 
     j = (
         pairs.join(
@@ -70,25 +58,25 @@ def verify_pairs(
     )
     if has_simhash:
         j = j.where(F.expr("bit_count(sim_a ^ sim_b)") <= threshold)
-    out = j.select("a", "b", F.expr(JACCARD_SQL).alias("jaccard"))
-    if not keep_below_tau:
-        out = out.where(F.col("jaccard") >= cfg.tau)
-    return out
+    return j.select("a", "b", F.expr(JACCARD_SQL).alias("jaccard")).where(
+        F.col("jaccard") >= cfg.tau
+    )
 
 
 def prefilter_pairs_by_simhash(
     pairs: DataFrame, sig_df: DataFrame, threshold: int
 ) -> DataFrame:
-    """J7 sketch filter (filterer.hpp:20-32, threshold :108-111): drop
-    candidate pairs whose 60-bit fingerprints differ in more than
-    `threshold` bits BEFORE the expensive exact verification.
+    """J7 sketch filter (filterer.hpp:20-32, threshold :108-111) in its
+    post-hoc form: drop candidate pairs whose 60-bit fingerprints
+    differ in more than `threshold` bits, via two joins against the
+    signature table.
 
-    The reference always filters; batch analog = a cheap bit_count
-    predicate on two slim int64 joins, a semi-join reduction that cuts
-    the verify stage's text re-derivation + set intersection to the
-    survivors. Pick `threshold` with planner.hamming_threshold_for so
-    the per-pair miss probability is accounted against the recall
-    budget (tests assert the flagship pair set is unchanged)."""
+    No production path calls this. The dedup pipeline
+    (candidate_pairs) and query mode (knn.lsh_query_pairs) both FUSE
+    the same bit_count predicate into pair generation, with the
+    fingerprint riding the bucket rows. This form stays as the
+    definitional reference the fused paths are tested against, and
+    because the frozen bench.py stage timer imports it."""
     sh = sig_df.select("doc_id", "simhash")
     return (
         pairs.join(

@@ -3,16 +3,20 @@ lifecycle): read → signatures (narrow) → band explode → bucket
 shuffle → candidate pairs → exact verify → connected components →
 cluster assignment.
 
-Every stage is a DataFrame; `run_dedup` returns them all so callers
-(tests, bench, __spark_entry__, the checkpointing StageRunner) can
-materialize whichever they need.
+The layers are defined once (`_dedup_layers`) and built through a
+stage hook: `run_dedup` composes them lazily, and
+`sources.stages.run_dedup_checkpointed` commits each one through
+`StageRunner.stage`. Every layer is a DataFrame; both return them all
+so callers (tests, bench, __spark_entry__) can materialize whichever
+they need.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from clann_spark.config import DedupConfig
@@ -43,7 +47,7 @@ def prepare_pages(pages: DataFrame, use_html: bool = False) -> DataFrame:
 
 @dataclass
 class DedupResult:
-    signatures: DataFrame      # doc_id, shingle_hashes, sig, bands, simhash
+    signatures: DataFrame      # doc_id, simhash, bands
     buckets: DataFrame         # doc_id, band_id, band_hash [, simhash
                                #   when the hamming prefilter is on —
                                #   the J7 fingerprint rides the bucket
@@ -52,15 +56,12 @@ class DedupResult:
     verified: DataFrame        # a, b, jaccard  (jaccard >= tau)
     clusters: DataFrame        # doc_id, cluster_id (only docs in a dup pair)
     assignments: DataFrame     # doc_id, cluster_id for ALL docs
-    base: DataFrame | None = None  # the pre-repartition (doc_id, text)
-                               #   projection — dedup_summary's narrow
-                               #   count source (None for hand-built
-                               #   results -> summary falls back to
-                               #   aggregating `assignments`)
+    base: DataFrame            # the (doc_id, text) input projection —
+                               #   dedup_summary's narrow count source
 
     def unpersist(self) -> None:
         """Release every cache run_dedup registered: the persisted
-        signatures/candidates/verified stages plus any intermediates
+        candidates/verified stages plus any intermediates
         tracked on them (the verify stage persists the candidate pair
         list and the candidate-doc shingle table; auto-mode pair
         generation is a single fused pass since round 6 and registers
@@ -72,95 +73,104 @@ class DedupResult:
 
         unpersist_intermediates(self.candidates)
         unpersist_intermediates(self.verified)
-        for df in (self.verified, self.candidates, self.signatures):
+        for df in (self.verified, self.candidates):
             try:
                 df.unpersist()
             except Exception:
                 pass
 
 
-def run_dedup(
-    docs: DataFrame,
+def _dedup_layers(
+    base: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pair_mode: str = "clique",
-    persist_signatures: bool = False,
+    pair_mode: str,
+    stage: Callable[..., DataFrame],
 ) -> DedupResult:
-    """Full pipeline over any DataFrame with (id_col, text_col).
+    """The six dedup layers, defined once: signatures -> buckets ->
+    candidates -> verified -> clusters -> assignments.
 
-    persist_signatures defaults to False since round 6: nothing inside
-    the pipeline reads the signature table twice (verification
-    re-derives shingles from text; auto-mode pair generation is one
-    fused pass), and a persisted-but-single-consumer cache split the
-    signature compute and the bucket-exchange write into two full
-    passes over the corpus (the InMemoryRelation boundary has its own
-    result stage). Callers that will re-read result.signatures can opt
-    back in.
+    base: the (doc_id, text) input. Each layer is built through
+    stage(name, builder, extra_counters=..., deps=[upstream names]),
+    which returns the DataFrame downstream layers read. run_dedup's
+    hook builds lazily and persists candidates and verified;
+    run_dedup_checkpointed passes StageRunner.stage, which commits each
+    layer (or resumes it) and folds `deps` into its fingerprint.
+
+    No blanket repartition: compute_signatures carries its own
+    SIZE-adaptive under-split guard (session.adaptive_input_split),
+    and the verify stage's candidate-doc scan inherits the input's own
+    splits. Signatures are slim — bands + simhash only (~270 B/row);
+    verify re-derives shingle sets for candidate docs, and
+    drop_text=True projects text away BEFORE the Arrow stage so the
+    document bytes never cross the Python boundary.
+
+    The J7 sketch filter (filterer.hpp:20-32) is FUSED into pair
+    generation: the 60-bit fingerprint rides the bucket rows (+8 B/row
+    through candidate_pairs' single exchange) and far pairs die on a
+    bit_count predicate between the pair generators — no post-hoc
+    joins against the signature table, and the cross-band distinct
+    shuffles only the survivors. So verify depends on candidates only.
     """
-    base0 = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    base = base0
-    # No blanket repartition here since round 6: compute_signatures
-    # carries its own SIZE-adaptive under-split guard (per-impl task
-    # granularity — see session.adaptive_input_split), so
-    # a small local corpus keeps its natural partitioning (the old
-    # unconditional repartition(2x parallelism) made every downstream
-    # stage a 64-task storm over kilobytes) while a big under-split
-    # input still fans out. The verify stage's candidate-doc scan
-    # inherits the input's own splits.
-    # slim signatures: bands + simhash only (~270 B/row); shingle sets
-    # are re-derived for candidate docs at verify time. drop_text=True
-    # projects text away BEFORE the Arrow stage so the document bytes
-    # never cross the Python boundary.
-    sigs = compute_signatures(
-        base, cfg, include_shingles=False, include_sig=False, drop_text=True
-    )
-    if persist_signatures:
-        sigs = sigs.persist()
-
-    # The bucket explode from the persisted slim signatures is a
-    # trivial narrow op, and the round-5 candidate stage reads it (and
-    # its exchange) exactly ONCE — pair generation is join-free, so no
-    # consumer re-executes the explode (candidates.py module
-    # docstring). (In the checkpointed pipeline the bucket table IS
-    # written once as a stage table — sources/stages.py.)
-    #
-    # J7 sketch filter (filterer.hpp:20-32) is FUSED into pair
-    # generation: the 60-bit fingerprint rides the bucket rows
-    # (+8 B/row through candidate_pairs' single exchange) and far
-    # pairs die on a bit_count predicate between the pair generators —
-    # no post-hoc joins against the signature table, and the
-    # cross-band distinct shuffles only the survivors.
     threshold = cfg.hamming_threshold
-    extra = ("simhash",) if threshold is not None else ()
-    buckets = explode_bands(sigs, cfg, extra_cols=extra)
-    cands = candidate_pairs(
-        buckets,
-        cfg,
-        mode=pair_mode,
-        sketch_col="simhash" if threshold is not None else None,
-        hamming_threshold=threshold,
-    ).persist()
-    verified = verify_pairs_from_text(cands, base, cfg).persist()
-    clusters = connected_components(verified)
-
-    assignments = (
-        base.select("doc_id")
+    sketch = "simhash" if threshold is not None else None
+    sigs = stage(
+        "signatures",
+        lambda: compute_signatures(
+            base, cfg, include_shingles=False, include_sig=False, drop_text=True
+        ),
+    )
+    buckets = stage(
+        "buckets",
+        lambda: explode_bands(sigs, cfg, extra_cols=(sketch,) if sketch else ()),
+        deps=["signatures"],
+    )
+    cands = stage(
+        "candidates",
+        lambda: candidate_pairs(
+            buckets, cfg, mode=pair_mode, sketch_col=sketch, hamming_threshold=threshold
+        ),
+        deps=["buckets"],
+    )
+    # A7/A8: exact comparisons + above-tau pairs, observed by the verify
+    # layer's own action (result_schema.sql search_metrics granularity)
+    verify_obs = Observation()
+    verified = stage(
+        "verified",
+        lambda: verify_pairs_from_text(cands, base, cfg, observation=verify_obs),
+        extra_counters=lambda: verify_obs.get,
+        deps=["candidates"],
+    )
+    clusters = stage(
+        "clusters", lambda: connected_components(verified), deps=["verified"]
+    )
+    assignments = stage(
+        "assignments",
+        lambda: base.select("doc_id")
         .join(clusters, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
+        ),
+        deps=["clusters"],
     )
-    return DedupResult(
-        signatures=sigs,
-        buckets=buckets,
-        candidates=cands,
-        verified=verified,
-        clusters=clusters,
-        assignments=assignments,
-        base=base0,
-    )
+    return DedupResult(sigs, buckets, cands, verified, clusters, assignments, base)
+
+
+def _lazy_stage(name, builder, extra_counters=None, deps=None) -> DataFrame:
+    """run_dedup's stage hook: build the plan, and persist the two
+    layers read more than once — candidates (verify's size-gate count
+    and its joins) and verified (CC plus the caller's own reads)."""
+    df = builder()
+    return df.persist() if name in ("candidates", "verified") else df
+
+
+def run_dedup(docs: DataFrame, cfg: DedupConfig, pair_mode: str = "clique") -> DedupResult:
+    """Full pipeline over any DataFrame with (doc_id, text). Nothing is
+    executed here; signatures are not persisted (nothing inside the
+    pipeline reads them twice, and a single-consumer cache would split
+    the signature compute and the bucket-exchange write into two
+    passes)."""
+    return _dedup_layers(docs.select("doc_id", "text"), cfg, pair_mode, _lazy_stage)
 
 
 def dedup_summary(result: DedupResult) -> DataFrame:
@@ -176,12 +186,6 @@ def dedup_summary(result: DedupResult) -> DataFrame:
     a left join of the whole corpus just to count rows. Values are
     identical (tests/test_dedup_recall.py, dedup_summary oracle row).
     """
-    if result.base is None:  # hand-built results: original definition
-        return result.assignments.agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct("cluster_id").alias("n_clusters"),
-            (F.count("*") - F.countDistinct("cluster_id")).alias("n_removed"),
-        )
     n = result.base.agg(F.count("*").alias("n_docs"))
     c = result.clusters.agg(
         F.count("*").alias("_m"), F.countDistinct("cluster_id").alias("_k")

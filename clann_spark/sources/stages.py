@@ -27,6 +27,17 @@ from dataclasses import asdict
 from pyspark.sql import DataFrame, SparkSession
 
 from clann_spark.config import DedupConfig
+from clann_spark.pipeline import _dedup_layers
+
+#: Version of the committed stage layout, folded into every
+#: StageRunner fingerprint. Bump it whenever a stage's columns or
+#: contents change under an unchanged config, so workdirs committed by
+#: older code rebuild instead of resuming into the new layout.
+#: 2: buckets carry simhash and candidates are sketch-filtered when the
+#: hamming prefilter is on (1 committed unfiltered candidates and
+#: filtered them post hoc in the verify stage). Streaming state keeps
+#: the plain config fingerprint: its layout did not change.
+STAGE_LAYOUT_VERSION = 2
 
 
 def _config_fingerprint(cfg: DedupConfig) -> str:
@@ -74,7 +85,7 @@ class StageRunner:
         self.workdir = workdir
         self.cfg = cfg
         self.run_id = run_id
-        self.fingerprint = _config_fingerprint(cfg)
+        self.fingerprint = f"{_config_fingerprint(cfg)}|layout={STAGE_LAYOUT_VERSION}"
         self.input_fingerprint = str(input_fingerprint)
         self.executed: list[str] = []   # stages actually built this run
         self.skipped: list[str] = []    # stages resumed from checkpoint
@@ -230,7 +241,9 @@ def run_dedup_checkpointed(
     pair_mode: str = "auto",
     input_id: str | None = None,
 ) -> dict:
-    """The full dedup pipeline as resumable committed stages.
+    """The full dedup pipeline as resumable committed stages: the same
+    layer definition run_dedup composes (pipeline._dedup_layers), with
+    StageRunner.stage as the hook.
 
     Stage graph: signatures -> buckets -> candidates -> verified ->
     clusters -> assignments, each fingerprinting its upstream lineage
@@ -242,68 +255,18 @@ def run_dedup_checkpointed(
     different sources without running a job, but not in-place file
     mutation under the same path.
     """
-    from pyspark.sql import functions as F
-
-    from clann_spark.operators.candidates import candidate_pairs
-    from clann_spark.operators.connected_components import connected_components
-    from clann_spark.operators.signatures import compute_signatures, explode_bands
-    from clann_spark.operators.verify import verify_pairs_from_text
-
     base = docs.select("doc_id", "text")
     if input_id is None:
         input_id = f"semhash:{base.semanticHash()}"
     runner = StageRunner(spark, workdir, cfg, input_fingerprint=input_id)
-
-    sigs = runner.stage(
-        "signatures",
-        lambda: compute_signatures(
-            base, cfg, include_shingles=False, include_sig=False, drop_text=True
-        ),
-    )
-    buckets = runner.stage("buckets", lambda: explode_bands(sigs, cfg), deps=["signatures"])
-    cands = runner.stage(
-        "candidates", lambda: candidate_pairs(buckets, cfg, mode=pair_mode), deps=["buckets"]
-    )
-
-    from pyspark.sql import Observation
-
-    verify_obs = Observation()
-
-    def _verified():
-        pairs = cands
-        threshold = cfg.hamming_threshold
-        if threshold is not None:
-            from clann_spark.operators.verify import prefilter_pairs_by_simhash
-
-            pairs = prefilter_pairs_by_simhash(pairs, sigs, threshold)
-        return verify_pairs_from_text(pairs, base, cfg, observation=verify_obs)
-
-    # A7/A8: comparisons + above-tau pairs observed by the stage's own
-    # write action land in the lineage counters (result_schema.sql
-    # search_metrics granularity)
-    verified = runner.stage(
-        "verified",
-        _verified,
-        extra_counters=lambda: verify_obs.get,
-        deps=["candidates", "signatures"],
-    )
-    clusters = runner.stage(
-        "clusters", lambda: connected_components(verified), deps=["verified"]
-    )
-    assignments = runner.stage(
-        "assignments",
-        lambda: base.select("doc_id")
-        .join(clusters, "doc_id", "left")
-        .select("doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")),
-        deps=["clusters"],
-    )
+    res = _dedup_layers(base, cfg, pair_mode, runner.stage)
     return {
         "runner": runner,
-        "signatures": sigs,
-        "buckets": buckets,
-        "candidates": cands,
-        "verified": verified,
-        "clusters": clusters,
-        "assignments": assignments,
+        "signatures": res.signatures,
+        "buckets": res.buckets,
+        "candidates": res.candidates,
+        "verified": res.verified,
+        "clusters": res.clusters,
+        "assignments": res.assignments,
         "metrics": runner.metrics(),
     }

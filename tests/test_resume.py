@@ -11,7 +11,8 @@ import pytest
 from clann_spark.config import DedupConfig
 from clann_spark.pipeline import prepare_pages
 from clann_spark.sources.pages import make_pages, pages_to_spark
-from clann_spark.sources.stages import StageRunner, run_dedup_checkpointed
+from clann_spark.sources import stages
+from clann_spark.sources.stages import run_dedup_checkpointed
 
 CFG = DedupConfig(signature_impl="fast")
 
@@ -37,23 +38,22 @@ def test_full_run_then_resume_skips_everything(spark, docs, tmp_path_factory):
     assert a1 == a2
 
 
-def test_crash_mid_pipeline_resumes_from_checkpoint(spark, docs, tmp_path_factory):
+def test_crash_mid_pipeline_resumes_from_checkpoint(
+    spark, docs, tmp_path_factory, monkeypatch
+):
     wd = str(tmp_path_factory.mktemp("ckpt"))
 
-    # simulate a crash: run only the first two stages, then "die".
-    # The runner must be parameterized exactly like the pipeline's
-    # (same input identity), or resume correctly refuses to trust it.
-    from clann_spark.operators.signatures import compute_signatures, explode_bands
+    # simulate a crash in the real pipeline: the candidates builder
+    # dies after signatures and buckets have committed
+    import clann_spark.pipeline as pipeline
 
-    base = docs.select("doc_id", "text")
-    runner = StageRunner(
-        spark, wd, CFG, input_fingerprint=f"semhash:{base.semanticHash()}"
-    )
-    sigs = runner.stage(
-        "signatures", lambda: compute_signatures(base, CFG, include_shingles=False).drop("text")
-    )
-    runner.stage("buckets", lambda: explode_bands(sigs, CFG), deps=["signatures"])
-    # (process exits here)
+    def _crash(*args, **kwargs):
+        raise RuntimeError("simulated crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "candidate_pairs", _crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run_dedup_checkpointed(spark, docs, CFG, wd)
 
     r = run_dedup_checkpointed(spark, docs, CFG, wd)
     assert r["runner"].skipped == ["signatures", "buckets"]
@@ -61,11 +61,60 @@ def test_crash_mid_pipeline_resumes_from_checkpoint(spark, docs, tmp_path_factor
     assert r["assignments"].count() == docs.count()
 
 
-def test_config_change_invalidates_checkpoint(spark, docs, tmp_path_factory):
+def test_config_change_invalidates_checkpoint(
+    spark, docs, tmp_path_factory, monkeypatch
+):
     wd = str(tmp_path_factory.mktemp("ckpt"))
     run_dedup_checkpointed(spark, docs, CFG, wd)
     r2 = run_dedup_checkpointed(spark, docs, CFG.with_(tau=0.7), wd)
     assert "signatures" in r2["runner"].executed  # fingerprint mismatch -> rebuilt
+
+    # a workdir committed under another stage layout (older code) must
+    # rebuild every stage, not resume into the current layout
+    wd = str(tmp_path_factory.mktemp("ckpt"))
+    with monkeypatch.context() as m:
+        m.setattr(stages, "STAGE_LAYOUT_VERSION", stages.STAGE_LAYOUT_VERSION - 1)
+        run_dedup_checkpointed(spark, docs, CFG, wd)
+    r3 = run_dedup_checkpointed(spark, docs, CFG, wd)
+    assert r3["runner"].skipped == []
+    assert r3["runner"].executed == [
+        "signatures", "buckets", "candidates", "verified", "clusters", "assignments",
+    ]
+
+
+def test_checkpointed_run_matches_run_dedup(spark, docs, tmp_path_factory):
+    """Both runs compose the same layer definition: with a prefilter
+    tight enough to drop band-collision pairs, the committed
+    candidates are the sketch-filtered pairs run_dedup ships, and the
+    verify counter compares exactly those."""
+    from clann_spark.pipeline import run_dedup
+
+    cfg = CFG.with_(hamming_prefilter=4)
+    wd = str(tmp_path_factory.mktemp("ckpt"))
+    r = run_dedup_checkpointed(spark, docs, cfg, wd)
+    res = run_dedup(docs, cfg, pair_mode="auto")
+
+    def pairs(df):
+        return {(row["a"], row["b"]) for row in df.collect()}
+
+    def labels(df):
+        return {(row["doc_id"], row["cluster_id"]) for row in df.collect()}
+
+    try:
+        assert pairs(r["candidates"]) == pairs(res.candidates)
+        assert pairs(r["verified"]) == pairs(res.verified)
+        assert labels(r["clusters"]) == labels(res.clusters)
+    finally:
+        res.unpersist()
+    m = {row["stage"]: row for row in r["metrics"].collect()}
+    assert m["verified"]["counters"]["comparisons"] == m["candidates"]["rows"]
+    # the filter must really bite, or the test proves nothing: the
+    # unfiltered pair set is larger
+    unfiltered = run_dedup(docs, cfg.with_(hamming_prefilter=None), pair_mode="auto")
+    try:
+        assert unfiltered.candidates.count() > m["candidates"]["rows"]
+    finally:
+        unfiltered.unpersist()
 
 
 def test_lineage_records_per_partition_rows(spark, docs, tmp_path_factory):
@@ -90,7 +139,9 @@ def test_metrics_counters_recorded(spark, docs, tmp_path_factory):
     c = m["verified"]["counters"]
     n_cands = m["candidates"]["rows"]
     n_verified = m["verified"]["rows"]
-    assert c["comparisons"] == n_cands > 0   # no prefilter in CFG
+    # CFG's prefilter resolves to threshold 25, but it runs inside
+    # candidate generation: verify compares every committed candidate
+    assert c["comparisons"] == n_cands > 0
     assert c["pairs_verified"] == n_verified > 0
     assert m["signatures"]["counters"] == {}
 

@@ -299,31 +299,46 @@ def test_bucket_state_plan_scans_committed_table_not_corpus(
 
 
 def test_lsh_text_query_fused_prefilter_matches_posthoc(spark, corpus):
-    """corpus_buckets carrying a simhash column fuses the J7 sketch
-    prefilter into the band join as a bit_count predicate; the match
-    set must equal the explode path (whose prefilter, when enabled,
-    runs as the two post-hoc joins of prefilter_pairs_by_simhash)."""
-    from clann_spark.operators.knn import lsh_text_query
+    """Query mode fuses the J7 sketch prefilter into the band join as a
+    bit_count predicate, both against a committed bucket table carrying
+    simhash and when it explodes corpus_sigs itself. Each fused pair
+    set must equal the post-hoc reference: prefilter_pairs_by_simhash
+    over the unfiltered band-join output."""
+    from pyspark.sql import functions as F
+
+    from clann_spark.operators.knn import lsh_query_pairs, lsh_text_query
     from clann_spark.operators.signatures import compute_signatures, explode_bands
+    from clann_spark.operators.verify import prefilter_pairs_by_simhash
 
     cfg = DedupConfig(signature_impl="fast", hamming_prefilter=8)
     docs, _ = corpus
     sigs = compute_signatures(docs, cfg, include_shingles=False, drop_text=True)
+    sigs = sigs.select("doc_id", "bands", "simhash")
     queries = spark.createDataFrame(
         [(9101, "corpus document number 3 with stable words repeated " * 6),
          (9102, "nothing shared with anything else at all here")],
         "doc_id long, text string",
     )
-    buckets = explode_bands(sigs.select("doc_id", "bands", "simhash"), cfg,
-                            extra_cols=("simhash",))
-    fused = lsh_text_query(queries, sigs, docs, cfg, corpus_buckets=buckets)
-    posthoc = lsh_text_query(queries, sigs.select("doc_id", "bands", "simhash"),
-                             docs, cfg)
-    f = {(r["query_id"], r["doc_id"], round(r["jaccard"], 9), r["rank"])
-         for r in fused.collect()}
-    p = {(r["query_id"], r["doc_id"], round(r["jaccard"], 9), r["rank"])
-         for r in posthoc.collect()}
-    assert f == p and (9101, 3) in {(a, b) for a, b, _, _ in f}
+    q_sigs = compute_signatures(
+        queries, cfg, include_shingles=False, include_sig=False, drop_text=True
+    )
+    buckets = explode_bands(sigs, cfg, extra_cols=("simhash",))
+    committed, _ = lsh_query_pairs(q_sigs, sigs, cfg, corpus_buckets=buckets)
+    exploded, cand = lsh_query_pairs(q_sigs, sigs, cfg)
+    reference = prefilter_pairs_by_simhash(
+        cand.select(F.col("query_id").alias("a"), F.col("doc_id").alias("b")),
+        sigs.select("doc_id", "simhash").unionByName(q_sigs.select("doc_id", "simhash")),
+        cfg.hamming_threshold,
+    )
+
+    def pairs(df):
+        return {(r["a"], r["b"]) for r in df.collect()}
+
+    want = pairs(reference)
+    assert pairs(committed) == want and pairs(exploded) == want
+    f = {(r["query_id"], r["doc_id"])
+         for r in lsh_text_query(queries, sigs, docs, cfg, corpus_buckets=buckets).collect()}
+    assert (9101, 3) in f
 
 
 def test_corpus_change_rebuilds_committed_bucket_table(
